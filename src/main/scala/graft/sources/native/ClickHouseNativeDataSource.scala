@@ -16,9 +16,11 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Tabl
 import org.apache.spark.sql.connector.expressions.{aggregate, Transform}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
 /**
  * `clickhouse_native` DataSource V2 — the Spark-native re-expression of
@@ -70,13 +72,14 @@ class ClickHouseNativeDataSource extends TableProvider with DataSourceRegister {
           .flatMap(_._2.get("compression"))
         catch { case _: java.io.IOException => None }
       val s = NativeCompression.maybeWrapRead(fs.open(p), conf, declared)
-      try NativeBlockReader.readHeader(s) finally s.close()
+      try NativeIO.naming(s"clickhouse_native file $p")(NativeBlockReader.readHeader(s))
+      finally s.close()
     }
     if (options.getBoolean("mergeSchema", false)) {
       // Schema evolution: the UNION of every readable file header, in
       // first-seen column order — the layout a long-lived table has
       // after `ALTER TABLE ADD COLUMN` (old parts simply lack the new
-      // column; both partition readers already null-fill absent
+      // column; the partition reader already null-fills absent
       // columns per block, and zone-map pruning keeps blocks whose
       // stats lack the column, so the merged schema is sufficient).
       // A column missing from ANY readable file must be nullable —
@@ -186,6 +189,11 @@ private[sources] object NativeIO {
     val single = Option(options.get("path")).toSeq
     (multi ++ single).distinct
   }
+
+  /** Runs `f`, re-throwing any IOException with `source` named in its message. */
+  def naming[T](source: String)(f: => T): T =
+    try f
+    catch { case e: java.io.IOException => throw new java.io.IOException(s"$source: ${e.getMessage}", e) }
 
   /** Expand dirs and globs into concrete .clickhouse/.native data files. */
   def resolveFiles(paths: Seq[String], conf: Configuration): Seq[Path] =
@@ -518,8 +526,9 @@ private[native] class NativeCountReaderFactory(conf: SerializableHadoopConf)
           case None =>
             val blocks = new NativeBlockReader(
               NativeCompression.maybeWrapRead(fs.open(path), conf.value), Some(Set.empty))
-            try while (blocks.hasNext) count += blocks.next().numRows
-            finally blocks.close()
+            try NativeIO.naming(s"clickhouse_native file $file") {
+              while (blocks.hasNext) count += blocks.next().numRows
+            } finally blocks.close()
         }
         emitted = true
         true
@@ -735,138 +744,73 @@ private[native] case class NativeInputPartition(file: String, start: Long = 0L,
 
 private[native] class NativeReaderFactory(required: StructType, limit: Int,
     conf: SerializableHadoopConf) extends PartitionReaderFactory {
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
+
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new NativePartitionReader(partition.asInstanceOf[NativeInputPartition], required, limit, conf.value)
+    throw new UnsupportedOperationException("clickhouse_native scans read columnar batches")
 
-  /**
-   * Columnar emit for flat schemas: the wire format is already
-   * column-major per block, so handing Spark a ColumnarBatch avoids
-   * the per-row boxed GenericInternalRow path and lets whole-stage
-   * codegen read vectors directly. Nested arrays and limit pushdown
-   * stay on the row path (arrays need child-vector assembly; limits
-   * are small by definition).
-   */
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    limit < 0 && required.nonEmpty && required.fields.forall(f => f.dataType match {
-      case _: ArrayType | _: MapType | _: StructType | _: DecimalType => false
-      case _ => true
-    })
-
-  override def createColumnarReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    new NativeColumnarPartitionReader(
-      partition.asInstanceOf[NativeInputPartition], required, conf.value)
+  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] = {
+    val part = partition.asInstanceOf[NativeInputPartition]
+    new NativeBatchReader(s"clickhouse_native file ${part.file}", {
+      val path = new Path(part.file)
+      val stream = path.getFileSystem(conf.value).open(path)
+      if (part.start > 0) stream.seek(part.start) // sidecar offsets are frame boundaries
+      new NativeBlockReader(NativeCompression.maybeWrapRead(stream, conf.value, part.compression),
+        Some(required.fieldNames.toSet), part.blockCount)
+    }, required, limit)
+  }
 }
 
-/** Executor-side columnar reader: one Native block → one ColumnarBatch. */
-private[native] class NativeColumnarPartitionReader(part: NativeInputPartition,
-    required: StructType, conf: Configuration)
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
+/**
+ * The one executor-side reader behind every Native scan (batch,
+ * micro-batch, limit; every type) and every `clickhouse_remote` read:
+ * one decoded block → one ColumnarBatch of the required columns, block
+ * at a time (never the whole source — contrast reference
+ * src/lib.rs:271-279, which materializes everything, twice).
+ *
+ *  - A required column the block lacks (an older part under a merged
+ *    schema) is null-filled.
+ *  - A required column whose wire type decodes to a different Spark
+ *    type than the read schema asks for (a user `.schema(...)`) fails
+ *    with an IOException naming `source` and the column — it never
+ *    lands in a vector of the wrong type.
+ *  - A zero-column batch still carries the block's row count.
+ *  - A pushed limit stops after the block that reaches it; Spark applies
+ *    the exact limit on top.
+ *
+ * Every IOException — open, decode, truncation — names `source`.
+ */
+private[sources] final class NativeBatchReader(source: String, open: => BlockSource,
+    required: StructType, limit: Int) extends PartitionReader[ColumnarBatch] {
 
-  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-  import org.apache.spark.sql.vectorized.ColumnarBatch
-
-  private val path = new Path(part.file)
-  private val stream = path.getFileSystem(conf).open(path)
-  if (part.start > 0) stream.seek(part.start) // sidecar offsets are frame boundaries
-  private val blocks = new NativeBlockReader(
-    NativeCompression.maybeWrapRead(stream, conf, part.compression), Some(required.fieldNames.toSet),
-    part.blockCount)
+  private val blocks = NativeIO.naming(source)(open)
   private var batch: ColumnarBatch = _
+  private var emitted = 0L
 
   override def next(): Boolean = {
     if (batch != null) { batch.close(); batch = null }
-    if (!blocks.hasNext) return false
-    val block = blocks.next()
-    val n = block.numRows
-    val byName = block.columns.map(c => c.name -> c).toMap
-    val vectors = required.fields.map { f =>
-      val v = new OnHeapColumnVector(n, f.dataType)
-      byName.get(f.name) match {
-        case None => v.putNulls(0, n)
-        case Some(col) if col.dict != null && f.dataType == StringType =>
-          fillDictionary(v, col, n)
-        case Some(col) => fill(v, f.dataType, col.values, n)
-      }
-      v: org.apache.spark.sql.vectorized.ColumnVector
-    }
-    batch = new ColumnarBatch(vectors, n)
-    true
-  }
-
-  /**
-   * LowCardinality string column → dictionary-backed vector: one
-   * byte-array per DISTINCT value plus a bulk int-id write, instead of
-   * copying every row's bytes (the same layout the vectorized parquet
-   * reader uses for dictionary-encoded pages). Nulls (id 0 of a
-   * Nullable inner) are marked in the null mask; their id still points
-   * at the dictionary's default slot, which is never read.
-   */
-  private def fillDictionary(v: OnHeapColumnVector, col: NativeColumn, n: Int): Unit = {
-    val dictBytes = col.dict.map {
-      case u: UTF8String => u.getBytes
-      case other => String.valueOf(other).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    }
-    v.setDictionary(new org.apache.spark.sql.execution.vectorized.Dictionary {
-      override def decodeToBinary(id: Int): Array[Byte] = dictBytes(id)
-      override def decodeToInt(id: Int): Int = throw new UnsupportedOperationException
-      override def decodeToLong(id: Int): Long = throw new UnsupportedOperationException
-      override def decodeToFloat(id: Int): Float = throw new UnsupportedOperationException
-      override def decodeToDouble(id: Int): Double = throw new UnsupportedOperationException
-    })
-    val ids = v.reserveDictionaryIds(n)
-    ids.putInts(0, n, col.dictIds, 0)
-    var i = 0
-    while (i < n) {
-      if (col.values(i) == null) v.putNull(i)
-      i += 1
-    }
-  }
-
-  private def fill(v: OnHeapColumnVector, dt: DataType, values: Array[Any], n: Int): Unit = {
-    var i = 0
-    dt match {
-      case IntegerType | DateType =>
-        while (i < n) {
-          val x = values(i)
-          if (x == null) v.putNull(i) else v.putInt(i, x.asInstanceOf[java.lang.Integer].intValue())
-          i += 1
-        }
-      case LongType | TimestampType | TimestampNTZType =>
-        while (i < n) {
-          val x = values(i)
-          if (x == null) v.putNull(i) else v.putLong(i, x.asInstanceOf[java.lang.Long].longValue())
-          i += 1
-        }
-      case DoubleType =>
-        while (i < n) {
-          val x = values(i)
-          if (x == null) v.putNull(i) else v.putDouble(i, x.asInstanceOf[java.lang.Double].doubleValue())
-          i += 1
-        }
-      case FloatType =>
-        while (i < n) {
-          val x = values(i)
-          if (x == null) v.putNull(i) else v.putFloat(i, x.asInstanceOf[java.lang.Float].floatValue())
-          i += 1
-        }
-      case BooleanType =>
-        while (i < n) {
-          val x = values(i)
-          if (x == null) v.putNull(i) else v.putBoolean(i, x.asInstanceOf[java.lang.Boolean].booleanValue())
-          i += 1
-        }
-      case StringType =>
-        while (i < n) {
-          val x = values(i)
-          if (x == null) v.putNull(i)
-          else {
-            val b = x.asInstanceOf[UTF8String].getBytes
-            v.putByteArray(i, b, 0, b.length)
+    if (limit >= 0 && emitted >= limit) return false
+    NativeIO.naming(source)(blocks.nextBlock()) match {
+      case None => false
+      case Some(block) =>
+        val n = block.numRows
+        val byName = block.columns.map(c => c.name -> c).toMap
+        val vectors: Array[ColumnVector] = required.fields.map { f =>
+          byName.get(f.name) match {
+            case Some(c) if NativeBatchReader.sameType(c.chType.sparkType, f.dataType) => c.vector
+            case Some(c) => throw new java.io.IOException(
+              s"$source: column '${f.name}' is ${c.chType.name} " +
+                s"(${c.chType.sparkType.simpleString}), but the read schema asks for " +
+                f.dataType.simpleString)
+            case None =>
+              val v = new OnHeapColumnVector(n, f.dataType)
+              v.putNulls(0, n)
+              v
           }
-          i += 1
         }
-      case other =>
-        throw new IllegalStateException(s"columnar fill: unexpected type $other")
+        batch = new ColumnarBatch(vectors, n)
+        emitted += n
+        true
     }
   }
 
@@ -877,61 +821,17 @@ private[native] class NativeColumnarPartitionReader(part: NativeInputPartition,
   }
 }
 
-/**
- * Executor-side streaming reader: one Native file → InternalRows,
- * block at a time (never the whole file — contrast reference
- * src/lib.rs:271-279 which materializes everything, twice).
- */
-private[native] class NativePartitionReader(part: NativeInputPartition, required: StructType,
-    limit: Int, conf: Configuration) extends PartitionReader[InternalRow] {
-
-  private val path = new Path(part.file)
-  private val stream = path.getFileSystem(conf).open(path)
-  if (part.start > 0) stream.seek(part.start) // sidecar offsets are frame boundaries
-  private val blocks = new NativeBlockReader(
-    NativeCompression.maybeWrapRead(stream, conf, part.compression), Some(required.fieldNames.toSet),
-    part.blockCount)
-
-  private var colValues: Array[Array[Any]] = _ // per required-field value arrays
-  private var rowsInBlock = 0
-  private var rowIdx = 0
-  private var emitted = 0L
-  private val row = new GenericInternalRow(required.length)
-
-  override def next(): Boolean = {
-    if (limit >= 0 && emitted >= limit) return false
-    while (rowIdx >= rowsInBlock) {
-      if (!hasNextBlock) return false
-      val block = blocks.next()
-      val byName = block.columns.map(c => c.name -> c).toMap
-      colValues = required.fields.map { f =>
-        byName.get(f.name).map(_.values).orNull // missing column → null fill
+private[sources] object NativeBatchReader {
+  /** Equal Spark types, ignoring nullability at every nesting level. */
+  private def sameType(a: DataType, b: DataType): Boolean = (a, b) match {
+    case (ArrayType(x, _), ArrayType(y, _)) => sameType(x, y)
+    case (MapType(k1, v1, _), MapType(k2, v2, _)) => sameType(k1, k2) && sameType(v1, v2)
+    case (StructType(f1), StructType(f2)) =>
+      f1.length == f2.length && f1.zip(f2).forall { case (x, y) =>
+        x.name == y.name && sameType(x.dataType, y.dataType)
       }
-      rowsInBlock = block.numRows
-      rowIdx = 0
-    }
-    var i = 0
-    while (i < required.length) {
-      val col = colValues(i)
-      row.update(i, if (col == null) null else col(rowIdx))
-      i += 1
-    }
-    rowIdx += 1
-    emitted += 1
-    true
+    case _ => a == b
   }
-
-  /** Wrap mid-file decode failures with the file path — a truncated or
-    * corrupt part should name itself, not surface as a bare EOF. */
-  private def hasNextBlock: Boolean =
-    try blocks.hasNext
-    catch {
-      case e: java.io.IOException =>
-        throw new java.io.IOException(s"clickhouse_native: corrupt or truncated file ${part.file}: ${e.getMessage}", e)
-    }
-
-  override def get(): InternalRow = row
-  override def close(): Unit = blocks.close()
 }
 
 // ---------------------------------------------------------------------------

@@ -1,277 +1,296 @@
 package graft.sources.native
 
+import java.io.IOException
+import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets.UTF_8
+
 import graft.sources.native.ChType._
 import graft.sources.native.NativeCodec.{Input, Output}
 
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.execution.vectorized.{Dictionary, OnHeapColumnVector, WritableColumnVector}
+import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
- * One decoded column of a Native block. `values` holds Catalyst-ready
- * values: UTF8String, java.lang.Integer/Long/Boolean/Float/Double,
- * ArrayData, or null.
- *
- * For LowCardinality string columns the decoder also retains the wire
- * dictionary and per-row indices (`dictIds`): the columnar reader then
- * fills a dictionary-backed vector (one byte-copy per DISTINCT value +
- * bulk int ids) instead of copying every row's bytes — the same layout
- * Spark's vectorized parquet reader uses for dictionary pages.
+ * One column of a block to WRITE: `values` holds Catalyst values
+ * (UTF8String, java.lang.Integer/Long/Boolean/Float/Double, Decimal,
+ * ArrayData, MapData, InternalRow, or null) in row order.
  */
-final case class NativeColumn(name: String, chType: ChType, values: Array[Any],
-    dict: Array[Any] = null, dictIds: Array[Int] = null)
+final case class NativeColumn(name: String, chType: ChType, values: Array[Any])
+
+/** A block to write: its columns and row count (SURVEY §1.1). */
+final case class NativeBlock(columns: Array[NativeColumn], numRows: Int)
+
+/** One column of a READ block: wire name, wire type, and the Spark vector
+  * (of `chType.sparkType`) its values were decoded into. */
+final case class DecodedColumn(name: String, chType: ChType, vector: WritableColumnVector)
 
 /**
- * A decoded Native block: self-describing columnar batch (SURVEY §1.1).
- * `numRows` comes from the block header, NOT from the decoded columns —
- * a fully-pruned block (`count(*)`: Catalyst requires zero columns)
- * still knows how many rows it carries.
+ * A decoded Native block. `header` lists every column's (name, type)
+ * in wire order, pruned ones included; `columns` holds the decoded
+ * ones. `numRows` comes from the block header, NOT from the decoded
+ * columns — a fully-pruned block (`count(*)`: Catalyst requires zero
+ * columns) still knows how many rows it carries.
  */
-final case class NativeBlock(columns: Array[NativeColumn], numRows: Int)
+final case class DecodedBlock(header: Seq[(String, ChType)], columns: Array[DecodedColumn],
+    numRows: Int)
 
 /**
  * Per-type column value codec. The reference's decode loop is
  * src/lib.rs:143-175 (String/UInt8/UInt64/Int32/Enum8, everything
  * else degraded to a sentinel string); ours covers the full §1.3
- * family and nests Nullable/Array.
+ * family and nests Nullable/Array/Map/Tuple.
  *
- * Decoding is column-at-a-time into flat arrays — the columnar layout
- * the wire format already has — rather than the reference's
- * row-at-a-time boxed-enum cells (src/lib.rs:28-35).
+ * There is one decode path: wire bytes go straight into Spark column
+ * vectors, column-at-a-time — the columnar layout the wire format
+ * already has — rather than the reference's row-at-a-time boxed-enum
+ * cells (src/lib.rs:28-35). Every Native scan and every remote read
+ * hands those vectors to Spark as `ColumnarBatch`es, so no value is
+ * boxed between the wire and the query.
  */
 object ColumnCodec {
 
   /**
-   * Decode a full column, preserving dictionary structure for
-   * LowCardinality string columns (see [[NativeColumn]]).
+   * Decode `rows` values of `t` from `in` into positions [0, rows) of
+   * `v`, a vector of `t.sparkType`: bulk little-endian puts for
+   * fixed-width types, byte arrays for text, null masks for Nullable,
+   * offsets plus child vectors for Array/Map, struct children for
+   * Tuple, and a dictionary-backed vector for LowCardinality strings.
    */
-  def decodeColumn(in: Input, name: String, t: ChType, rows: Int): NativeColumn = t match {
-    case lc @ ChLowCardinality(ChString) =>
-      val out = new Array[Any](rows)
-      val (dict, ids) = decodeLowCardinality(in, lc, rows, out)
-      NativeColumn(name, t, out, dict, ids)
-    case _ =>
-      NativeColumn(name, t, decode(in, t, rows))
-  }
-
-  /** Decode `rows` values of `t` from `in` into a Catalyst-value array. */
-  def decode(in: Input, t: ChType, rows: Int): Array[Any] = {
-    val out = new Array[Any](rows)
+  def decode(in: Input, t: ChType, rows: Int, v: WritableColumnVector): Unit = {
+    v.reserve(rows)
     t match {
       case ChString =>
         var i = 0
-        while (i < rows) { out(i) = in.readUtf8(); i += 1 }
+        while (i < rows) { putText(in, v, i, narrow(in.readVarUInt())); i += 1 }
       case ChFixedString(n) =>
-        // FixedString(n): n raw bytes per value, NUL-padded; sanitize
-        // strips the padding (reference strips NUL everywhere, src/lib.rs:73-74).
+        // FixedString(n): n raw bytes per value, NUL-padded; the text
+        // sanitize strips the padding (reference strips NUL everywhere,
+        // src/lib.rs:73-74).
         var i = 0
-        while (i < rows) {
-          out(i) = UTF8String.fromString(NativeCodec.sanitize(
-            new String(in.readBytes(n), java.nio.charset.StandardCharsets.UTF_8)))
-          i += 1
-        }
-      case ChUInt8 =>
-        var i = 0
-        while (i < rows) { out(i) = Integer.valueOf(in.readByte()); i += 1 }
-      case ChInt8 =>
-        var i = 0
-        while (i < rows) { out(i) = Integer.valueOf(in.readByte().toByte.toInt); i += 1 }
-      case ChBool =>
-        var i = 0
-        while (i < rows) { out(i) = java.lang.Boolean.valueOf(in.readByte() != 0); i += 1 }
-      case ChUInt16 =>
-        var i = 0
-        while (i < rows) { out(i) = Integer.valueOf(in.readShortLE() & 0xffff); i += 1 }
-      case ChInt16 =>
-        var i = 0
-        while (i < rows) { out(i) = Integer.valueOf(in.readShortLE().toInt); i += 1 }
-      case ChUInt32 =>
-        var i = 0
-        while (i < rows) { out(i) = java.lang.Long.valueOf(in.readIntLE() & 0xffffffffL); i += 1 }
-      case ChInt32 =>
-        var i = 0
-        while (i < rows) { out(i) = Integer.valueOf(in.readIntLE()); i += 1 }
+        while (i < rows) { putText(in, v, i, n); i += 1 }
+      case ChUInt8 => chunks(in, rows, 1) { (b, first, n) =>
+        var j = 0
+        while (j < n) { v.putInt(first + j, b.get(j) & 0xff); j += 1 }
+      }
+      case ChInt8 => chunks(in, rows, 1) { (b, first, n) =>
+        var j = 0
+        while (j < n) { v.putInt(first + j, b.get(j).toInt); j += 1 }
+      }
+      case ChBool => chunks(in, rows, 1) { (b, first, n) =>
+        var j = 0
+        while (j < n) { v.putBoolean(first + j, b.get(j) != 0); j += 1 }
+      }
+      // Date: UInt16 days since epoch == Spark DateType's internal Int days.
+      case ChUInt16 | ChDate => chunks(in, rows, 2) { (b, first, n) =>
+        var j = 0
+        while (j < n) { v.putInt(first + j, b.getShort(2 * j) & 0xffff); j += 1 }
+      }
+      case ChInt16 => chunks(in, rows, 2) { (b, first, n) =>
+        var j = 0
+        while (j < n) { v.putInt(first + j, b.getShort(2 * j).toInt); j += 1 }
+      }
+      case ChUInt32 => chunks(in, rows, 4) { (b, first, n) =>
+        var j = 0
+        while (j < n) { v.putLong(first + j, b.getInt(4 * j) & 0xffffffffL); j += 1 }
+      }
+      // Date32: Int32 signed days (pre-1970 roundtrips).
+      case ChInt32 | ChDate32 =>
+        chunks(in, rows, 4)((b, first, n) => v.putIntsLittleEndian(first, n, b.array, 0))
       case ChUInt64 | ChInt64 =>
-        var i = 0
-        while (i < rows) { out(i) = java.lang.Long.valueOf(in.readLongLE()); i += 1 }
+        chunks(in, rows, 8)((b, first, n) => v.putLongsLittleEndian(first, n, b.array, 0))
       case ChFloat32 =>
-        var i = 0
-        while (i < rows) { out(i) = java.lang.Float.valueOf(in.readFloatLE()); i += 1 }
+        chunks(in, rows, 4)((b, first, n) => v.putFloatsLittleEndian(first, n, b.array, 0))
       case ChFloat64 =>
-        var i = 0
-        while (i < rows) { out(i) = java.lang.Double.valueOf(in.readDoubleLE()); i += 1 }
-      case ChDate =>
-        // UInt16 days since epoch == Spark DateType's internal Int days.
-        var i = 0
-        while (i < rows) { out(i) = Integer.valueOf(in.readShortLE() & 0xffff); i += 1 }
-      case ChDate32 =>
-        // Int32 signed days (pre-1970 roundtrips).
-        var i = 0
-        while (i < rows) { out(i) = Integer.valueOf(in.readIntLE()); i += 1 }
+        chunks(in, rows, 8)((b, first, n) => v.putDoublesLittleEndian(first, n, b.array, 0))
       case d: ChDecimal =>
-        // little-endian two's-complement scaled integer → Catalyst Decimal
-        var i = 0
-        if (d.byteWidth == 4) {
-          while (i < rows) {
-            out(i) = org.apache.spark.sql.types.Decimal(
-              BigDecimal(java.math.BigDecimal.valueOf(in.readIntLE().toLong, d.scale)),
-              d.precision, d.scale)
-            i += 1
-          }
-        } else if (d.byteWidth == 8) {
-          while (i < rows) {
-            out(i) = org.apache.spark.sql.types.Decimal(
-              BigDecimal(java.math.BigDecimal.valueOf(in.readLongLE(), d.scale)),
-              d.precision, d.scale)
-            i += 1
-          }
-        } else {
-          // Decimal128 tier: 16 LE two's-complement bytes → BigInteger
-          while (i < rows) {
-            out(i) = org.apache.spark.sql.types.Decimal(
-              BigDecimal(new java.math.BigDecimal(
-                readWideInt(in, 16, signed = true), d.scale)),
-              d.precision, d.scale)
-            i += 1
-          }
+        // little-endian two's-complement scaled integer. The storage
+        // tiers line up with Spark's: P<=9 is an Int vector, P<=18 a
+        // Long vector, wider a big-endian two's-complement byte array.
+        d.byteWidth match {
+          case 4 => chunks(in, rows, 4)((b, first, n) => v.putIntsLittleEndian(first, n, b.array, 0))
+          case 8 => chunks(in, rows, 8)((b, first, n) => v.putLongsLittleEndian(first, n, b.array, 0))
+          case w =>
+            val be = new Array[Byte](w)
+            chunks(in, rows, w) { (b, first, n) =>
+              var j = 0
+              while (j < n) {
+                var k = 0
+                while (k < w) { be(k) = b.get(w * j + w - 1 - k); k += 1 }
+                v.putByteArray(first + j, be, 0, w)
+                j += 1
+              }
+            }
         }
       case ChDateTime(_) =>
         // UInt32 epoch seconds → Catalyst micros.
-        var i = 0
-        while (i < rows) { out(i) = java.lang.Long.valueOf((in.readIntLE() & 0xffffffffL) * 1000000L); i += 1 }
+        chunks(in, rows, 4) { (b, first, n) =>
+          var j = 0
+          while (j < n) { v.putLong(first + j, (b.getInt(4 * j) & 0xffffffffL) * 1000000L); j += 1 }
+        }
       case ChDateTime64(p, _) =>
-        var i = 0
-        if (p <= 6) {
-          val scale = math.pow(10, 6 - p).toLong
-          while (i < rows) { out(i) = java.lang.Long.valueOf(in.readLongLE() * scale); i += 1 }
-        } else {
-          val div = math.pow(10, p - 6).toLong
-          while (i < rows) { out(i) = java.lang.Long.valueOf(in.readLongLE() / div); i += 1 }
+        val scale = if (p <= 6) math.pow(10, 6 - p).toLong else 1L
+        val div = if (p > 6) math.pow(10, p - 6).toLong else 1L
+        chunks(in, rows, 8) { (b, first, n) =>
+          var j = 0
+          while (j < n) { v.putLong(first + j, b.getLong(8 * j) * scale / div); j += 1 }
         }
       case e @ ChEnum8(_) =>
         // Int8 code → declared label, or "Unknown(N)" (src/lib.rs:157-166).
-        var i = 0
-        while (i < rows) {
-          val code = in.readByte().toByte
-          out(i) = UTF8String.fromString(e.byCode.getOrElse(code, s"Unknown($code)"))
-          i += 1
+        chunks(in, rows, 1) { (b, first, n) =>
+          var j = 0
+          while (j < n) {
+            val code = b.get(j)
+            putString(v, first + j, e.byCode.getOrElse(code, s"Unknown($code)"))
+            j += 1
+          }
         }
       case e @ ChEnum16(_) =>
         // Int16 LE code → declared label, same degradation as Enum8.
-        var i = 0
-        while (i < rows) {
-          val code = in.readShortLE()
-          out(i) = UTF8String.fromString(e.byCode.getOrElse(code, s"Unknown($code)"))
-          i += 1
+        chunks(in, rows, 2) { (b, first, n) =>
+          var j = 0
+          while (j < n) {
+            val code = b.getShort(2 * j)
+            putString(v, first + j, e.byCode.getOrElse(code, s"Unknown($code)"))
+            j += 1
+          }
         }
       case ChNullable(inner) =>
         // Wire layout: null-mask byte per row first, then inner values
         // (ClickHouse writes a default value in the slot of a null).
-        val mask = new Array[Boolean](rows)
+        val mask = in.readBytes(rows)
+        decode(in, inner, rows, v)
         var i = 0
-        while (i < rows) { mask(i) = in.readByte() != 0; i += 1 }
-        val inner_vals = decode(in, inner, rows)
-        i = 0
-        while (i < rows) { out(i) = if (mask(i)) null else inner_vals(i); i += 1 }
+        while (i < rows) { if (mask(i) != 0) v.putNull(i); i += 1 }
       case ChArray(inner) =>
         // Wire layout: UInt64 cumulative end-offsets per row, then the
         // flattened element stream.
-        val offsets = new Array[Long](rows)
-        var i = 0
-        while (i < rows) { offsets(i) = in.readLongLE(); i += 1 }
-        val total = if (rows == 0) 0 else offsets(rows - 1).toInt
-        val flat = decode(in, inner, total)
-        var start = 0
-        i = 0
-        while (i < rows) {
-          val end = offsets(i).toInt
-          out(i) = new GenericArrayData(java.util.Arrays.copyOfRange(flat.asInstanceOf[Array[AnyRef]], start, end))
-          start = end
-          i += 1
-        }
+        decode(in, inner, offsets(in, rows, v), v.arrayData())
       case ChMap(kt, vt) =>
         // Array(Tuple(K,V)) layout: offsets, all keys flat, all values flat
-        val offsets = new Array[Long](rows)
-        var i = 0
-        while (i < rows) { offsets(i) = in.readLongLE(); i += 1 }
-        val total = if (rows == 0) 0 else offsets(rows - 1).toInt
-        val keys = decode(in, kt, total)
-        val vals = decode(in, vt, total)
-        var start = 0
-        i = 0
-        while (i < rows) {
-          val end = offsets(i).toInt
-          out(i) = new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-            new GenericArrayData(java.util.Arrays.copyOfRange(keys.asInstanceOf[Array[AnyRef]], start, end)),
-            new GenericArrayData(java.util.Arrays.copyOfRange(vals.asInstanceOf[Array[AnyRef]], start, end)))
-          start = end
-          i += 1
-        }
+        val total = offsets(in, rows, v)
+        decode(in, kt, total, v.getChild(0))
+        decode(in, vt, total, v.getChild(1))
       case ChTuple(fields) =>
         // element columns are contiguous: all of element 1, then element 2, …
-        val cols = fields.map { case (_, ft) => decode(in, ft, rows) }
-        var i = 0
-        while (i < rows) {
-          val row = new Array[Any](fields.length)
-          var f = 0
-          while (f < fields.length) { row(f) = cols(f)(i); f += 1 }
-          out(i) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(row)
-          i += 1
-        }
+        var f = 0
+        while (f < fields.length) { decode(in, fields(f)._2, rows, v.getChild(f)); f += 1 }
       case ChUuid =>
         // LE(msb64) ++ LE(lsb64) → canonical lowercase string
-        var i = 0
-        while (i < rows) {
-          val msb = in.readLongLE()
-          val lsb = in.readLongLE()
-          out(i) = UTF8String.fromString(new java.util.UUID(msb, lsb).toString)
-          i += 1
+        chunks(in, rows, 16) { (b, first, n) =>
+          var j = 0
+          while (j < n) {
+            putString(v, first + j, new java.util.UUID(b.getLong(16 * j), b.getLong(16 * j + 8)).toString)
+            j += 1
+          }
         }
-      case ChIPv4 =>
-        var i = 0
-        while (i < rows) {
-          val v = in.readIntLE()
-          out(i) = UTF8String.fromString(
-            s"${(v >>> 24) & 0xff}.${(v >>> 16) & 0xff}.${(v >>> 8) & 0xff}.${v & 0xff}")
-          i += 1
+      case ChIPv4 => chunks(in, rows, 4) { (b, first, n) =>
+        var j = 0
+        while (j < n) {
+          val a = b.getInt(4 * j)
+          putString(v, first + j,
+            s"${(a >>> 24) & 0xff}.${(a >>> 16) & 0xff}.${(a >>> 8) & 0xff}.${a & 0xff}")
+          j += 1
         }
+      }
       case ChIPv6 =>
         // 16 network-order bytes → expanded lowercase hex groups (pure
         // arithmetic; see ChIPv6 scaladoc for why not InetAddress)
-        var i = 0
-        while (i < rows) {
-          val b = in.readBytes(16)
-          val sb = new java.lang.StringBuilder(39)
-          var g = 0
-          while (g < 8) {
-            if (g > 0) sb.append(':')
-            sb.append(java.lang.Integer.toHexString(
-              ((b(2 * g) & 0xff) << 8) | (b(2 * g + 1) & 0xff)))
-            g += 1
+        chunks(in, rows, 16) { (b, first, n) =>
+          var j = 0
+          while (j < n) {
+            val sb = new java.lang.StringBuilder(39)
+            var g = 0
+            while (g < 8) {
+              if (g > 0) sb.append(':')
+              sb.append(java.lang.Integer.toHexString(
+                ((b.get(16 * j + 2 * g) & 0xff) << 8) | (b.get(16 * j + 2 * g + 1) & 0xff)))
+              g += 1
+            }
+            putString(v, first + j, sb.toString)
+            j += 1
           }
-          out(i) = UTF8String.fromString(sb.toString)
-          i += 1
         }
       case ChBigInt(_, width, signed) =>
         // LE bytes → BigInteger → exact decimal string (the reference
         // emits `<unsupported:T>` sentinels here, src/lib.rs:137)
         var i = 0
-        while (i < rows) {
-          out(i) = UTF8String.fromString(readWideInt(in, width, signed).toString)
-          i += 1
-        }
+        while (i < rows) { putString(v, i, readWideInt(in, width, signed).toString); i += 1 }
       case ChWideDecimal(_, width, scale) =>
         var i = 0
         while (i < rows) {
-          out(i) = UTF8String.fromString(new java.math.BigDecimal(
-            readWideInt(in, width, signed = true), scale).toPlainString)
+          putString(v, i,
+            new java.math.BigDecimal(readWideInt(in, width, signed = true), scale).toPlainString)
           i += 1
         }
       case lc: ChLowCardinality =>
-        decodeLowCardinality(in, lc, rows, out)
+        decodeLowCardinality(in, lc, rows, v)
       case _: ChUnsupported =>
         throw new UnsupportedColumnException(t.name)
     }
-    out
+  }
+
+  /**
+   * Read `rows` values of `width` bytes in chunks through the input's
+   * little-endian scratch window; `put(window, first, n)` stores rows
+   * [first, first + n) from window positions [0, n * width).
+   */
+  private def chunks(in: Input, rows: Int, width: Int)(put: (ByteBuffer, Int, Int) => Unit): Unit = {
+    val b = in.scratch
+    val perChunk = b.capacity / width
+    var first = 0
+    while (first < rows) {
+      val n = math.min(perChunk, rows - first)
+      in.readFully(b.array, 0, n * width)
+      put(b, first, n)
+      first += n
+    }
+  }
+
+  /** A wire length or count narrowed to Int, or an IOException. */
+  private def narrow(n: Long): Int = {
+    if (n < 0 || n > Int.MaxValue) throw new IOException(s"Native length $n out of range")
+    n.toInt
+  }
+
+  /**
+   * `len` bytes of text into row `i`. Pure-ASCII bytes without NUL —
+   * by far the common case — pass through as they are; anything else
+   * goes through the lossy UTF-8 decode with NUL and U+FFFD stripped
+   * (parity with the reference's sanitize, src/lib.rs:68-76).
+   */
+  private def putText(in: Input, v: WritableColumnVector, i: Int, len: Int): Unit = {
+    val b = if (len <= in.scratch.capacity) in.scratch.array else new Array[Byte](len)
+    in.readFully(b, 0, len)
+    var ascii = true
+    var k = 0
+    while (ascii && k < len) { if (b(k) <= 0) ascii = false; k += 1 }
+    if (ascii) v.putByteArray(i, b, 0, len)
+    else putString(v, i, NativeCodec.sanitize(new String(b, 0, len, UTF_8)))
+  }
+
+  private def putString(v: WritableColumnVector, i: Int, s: String): Unit = {
+    val b = s.getBytes(UTF_8)
+    v.putByteArray(i, b, 0, b.length)
+  }
+
+  /** `rows` cumulative UInt64 end offsets into `v`'s (offset, length)
+    * slots; returns the element count of the flattened child stream. */
+  private def offsets(in: Input, rows: Int, v: WritableColumnVector): Int = {
+    var start = 0L
+    chunks(in, rows, 8) { (b, first, n) =>
+      var j = 0
+      while (j < n) {
+        val end = b.getLong(8 * j)
+        if (end < start || end > Int.MaxValue)
+          throw new IOException(s"Native array offset $end out of range after $start")
+        v.putArray(first + j, start.toInt, (end - start).toInt)
+        start = end
+        j += 1
+      }
+    }
+    start.toInt
   }
 
   // LowCardinality serialization-type flags (ClickHouse wire format).
@@ -292,15 +311,15 @@ object ColumnCodec {
    *
    * The reference never decodes this — any LowCardinality column makes
    * it emit `<unsupported>` sentinels without consuming bytes,
-   * corrupting every later column (src/lib.rs:168-170). Here it decodes
-   * to the inner type's Catalyst values via dictionary lookup.
+   * corrupting every later column (src/lib.rs:168-170).
    *
-   * @return the dictionary and per-row indices (for the columnar
-   *         reader's dictionary-backed fill); `out` is filled with the
-   *         materialized per-row values either way.
+   * String dictionaries become a dictionary-backed vector: one byte
+   * array per DISTINCT value plus int ids, instead of copying every
+   * row's bytes — the layout Spark's vectorized parquet reader uses for
+   * dictionary pages. Other inner types are gathered into plain values.
    */
   private def decodeLowCardinality(in: Input, lc: ChLowCardinality, rows: Int,
-      out: Array[Any]): (Array[Any], Array[Int]) = {
+      v: WritableColumnVector): Unit = {
     val version = in.readLongLE()
     if (version != 1L)
       throw new UnsupportedColumnException(s"${lc.name} (keys version $version)")
@@ -311,26 +330,64 @@ object ColumnCodec {
       case ChNullable(i) => (i, true)
       case i => (i, false)
     }
-    val dictSize = in.readLongLE().toInt
-    val dict = decode(in, inner, dictSize)
-    val n = in.readLongLE().toInt
-    require(n == rows, s"LowCardinality row count $n != block rows $rows")
-    val width = (serType & LcIndexWidthMask).toInt
+    val dictSize = narrow(in.readLongLE())
+    val dict = new OnHeapColumnVector(dictSize, inner.sparkType)
+    decode(in, inner, dictSize, dict)
+    val n = in.readLongLE()
+    if (n != rows) throw new IOException(s"LowCardinality row count $n != block rows $rows")
     val ids = new Array[Int](rows)
-    var i = 0
-    while (i < rows) {
-      val idx = width match {
-        case 0 => in.readByte()
-        case 1 => in.readShortLE() & 0xffff
-        case 2 => in.readIntLE()
-        case _ => in.readLongLE().toInt
-      }
-      ids(i) = idx
-      out(i) = if (nullable && idx == 0) null else dict(idx)
-      i += 1
+    val width = (serType & LcIndexWidthMask).toInt match {
+      case 0 => 1; case 1 => 2; case 2 => 4; case _ => 8
     }
-    (dict, ids)
+    chunks(in, rows, width) { (b, first, n) =>
+      var j = 0
+      while (j < n) {
+        val id = width match {
+          case 1 => b.get(j) & 0xff
+          case 2 => b.getShort(2 * j) & 0xffff
+          case 4 => b.getInt(4 * j)
+          case _ => b.getLong(8 * j).toInt
+        }
+        if (id < 0 || id >= dictSize)
+          throw new IOException(s"LowCardinality index $id outside dictionary of $dictSize")
+        ids(first + j) = id
+        j += 1
+      }
+    }
+    if (inner.sparkType == StringType) {
+      val bytes = Array.tabulate(dictSize)(dict.getBinary)
+      v.setDictionary(new Dictionary {
+        override def decodeToBinary(id: Int): Array[Byte] = bytes(id)
+        override def decodeToInt(id: Int): Int = throw new UnsupportedOperationException
+        override def decodeToLong(id: Int): Long = throw new UnsupportedOperationException
+        override def decodeToFloat(id: Int): Float = throw new UnsupportedOperationException
+        override def decodeToDouble(id: Int): Double = throw new UnsupportedOperationException
+      })
+      v.reserveDictionaryIds(rows).putInts(0, rows, ids, 0)
+    } else {
+      var i = 0
+      while (i < rows) { copyValue(dict, ids(i), v, i); i += 1 }
+    }
+    // a Nullable inner's index 0 is NULL; its id still points at the
+    // dictionary's default slot, which is never read
+    if (nullable) {
+      var i = 0
+      while (i < rows) { if (ids(i) == 0) v.putNull(i); i += 1 }
+    }
+    dict.close()
   }
+
+  /** Row `j` of scalar vector `src` into row `i` of `dst` (same type). */
+  private def copyValue(src: WritableColumnVector, j: Int, dst: WritableColumnVector, i: Int): Unit =
+    src.dataType match {
+      case BooleanType => dst.putBoolean(i, src.getBoolean(j))
+      case IntegerType | DateType => dst.putInt(i, src.getInt(j))
+      case LongType | TimestampType | TimestampNTZType => dst.putLong(i, src.getLong(j))
+      case FloatType => dst.putFloat(i, src.getFloat(j))
+      case DoubleType => dst.putDouble(i, src.getDouble(j))
+      case d: DecimalType => dst.putDecimal(i, src.getDecimal(j, d.precision, d.scale), d.precision)
+      case other => throw new UnsupportedColumnException(s"LowCardinality(${other.simpleString})")
+    }
 
   /** Byte width for fixed-width types (None = variable). Used for skip-decode. */
   def fixedWidth(t: ChType): Option[Int] = t match {

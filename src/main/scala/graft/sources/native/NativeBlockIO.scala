@@ -1,8 +1,10 @@
 package graft.sources.native
 
-import java.io.{BufferedInputStream, BufferedOutputStream, InputStream, OutputStream}
+import java.io.{BufferedInputStream, BufferedOutputStream, IOException, InputStream, OutputStream}
 
 import graft.sources.native.NativeCodec.{Input, Output}
+
+import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
 
 /**
  * Streaming block reader for the ClickHouse Native file format
@@ -23,6 +25,10 @@ import graft.sources.native.NativeCodec.{Input, Output}
  * (src/lib.rs:251, :271-274), this is a pull-based iterator: one block
  * in memory at a time, which is what lets a 100 TB scan stream.
  *
+ * Each block decodes straight into Spark column vectors
+ * ([[ColumnCodec.decode]]) through [[NativeBlockReader.readBody]], the
+ * block-body parser native-TCP Data packets share.
+ *
  * @param projection column names to materialize (None = all). Pruned
  *                   columns are skip-decoded (ColumnCodec.skip) — the
  *                   format is column-contiguous within a block, so
@@ -33,58 +39,111 @@ import graft.sources.native.NativeCodec.{Input, Output}
  */
 final class NativeBlockReader(stream: InputStream, projection: Option[Set[String]] = None,
     blockLimit: Int = -1)
-    extends Iterator[NativeBlock] with AutoCloseable {
+    extends Iterator[DecodedBlock] with BlockSource {
 
   private val in = new Input(if (stream.isInstanceOf[BufferedInputStream]) stream
     else new BufferedInputStream(stream, 64 * 1024))
-  private var nextBlock: NativeBlock = _
+  private var pending: DecodedBlock = _
   private var blocksRead = 0
   private var finished = false
 
   override def hasNext: Boolean = {
     if (finished) return false
-    if (nextBlock != null) return true
+    if (pending != null) return true
     if (blockLimit >= 0 && blocksRead >= blockLimit) { finished = true; close(); return false }
     readBlock() match {
-      case Some(b) => nextBlock = b; true
+      case Some(b) => pending = b; true
       case None => finished = true; close(); false
     }
   }
 
-  override def next(): NativeBlock = {
+  override def next(): DecodedBlock = {
     if (!hasNext) throw new NoSuchElementException
-    val b = nextBlock
-    nextBlock = null
+    val b = pending
+    pending = null
     b
   }
 
-  private def readBlock(): Option[NativeBlock] = {
-    val nCols = in.tryReadVarUInt() match {
-      case None => return None // clean EOF between blocks
-      case Some(n) => n.toInt
+  override def nextBlock(): Option[DecodedBlock] = if (hasNext) Some(next()) else None
+
+  private def readBlock(): Option[DecodedBlock] =
+    in.tryReadVarUInt() match {
+      case None => None // clean EOF between blocks
+      case Some(nCols) =>
+        val b = NativeBlockReader.readBody(in, nCols, projection)
+        if (nCols == 0 || b.numRows == 0) None // zero-row terminator (src/lib.rs:222)
+        else { blocksRead += 1; Some(b) }
     }
-    val nRows = in.readVarUInt().toInt
-    if (nCols == 0 || nRows == 0) return None // zero-row terminator (src/lib.rs:222)
-    val cols = Array.newBuilder[NativeColumn]
-    var c = 0
-    while (c < nCols) {
-      val name = in.readString()
-      val chType = ChType.parse(in.readString())
-      if (projection.forall(_.contains(name))) {
-        cols += ColumnCodec.decodeColumn(in, name, chType, nRows)
-      } else {
-        ColumnCodec.skip(in, chType, nRows)
-      }
-      c += 1
-    }
-    blocksRead += 1
-    Some(NativeBlock(cols.result(), nRows))
-  }
 
   override def close(): Unit = stream.close()
 }
 
+/** A stream of decoded Native blocks, however carried: a file or socket
+  * byte stream, or the Data packets of a native-TCP session. */
+trait BlockSource extends AutoCloseable {
+  /** The next block (zero-row tcp header blocks included), or None at the end. */
+  def nextBlock(): Option[DecodedBlock]
+}
+
 object NativeBlockReader {
+  // Plausibility caps on a block header's counts. Real servers cap
+  // blocks at max_block_size (default 65536; practical ceilings are low
+  // millions even with huge settings) — 100M rows is ~1500× the default
+  // and far beyond anything a server or our writer emits, mirroring the
+  // 64 MB frame cap on the compressed path. The decoder allocates
+  // O(rows) per column before the payload arrives, so a hostile 2^31-row
+  // header must fail here, not as an allocation OOM.
+  private val MaxColumns = 1000000L
+  private val MaxRows = 100000000L
+
+  /**
+   * The one block-body parser: Native file scans, schema probes and
+   * native-TCP Data packets all call it. `nCols` is the block's column
+   * count, already read by the caller (a file detects clean EOF on it;
+   * tcp reads BlockInfo before it). Reads the row count, rejects either
+   * count above its cap BEFORE narrowing it to Int (a count of 2^32+5
+   * must not wrap to 5), then each column's name and type. Projected
+   * columns decode into vectors; the rest are skip-decoded. With
+   * `lastValues = false` the final column's values stay unread — a
+   * header probe needs no data.
+   */
+  def readBody(in: Input, nCols: Long, projection: Option[Set[String]],
+      lastValues: Boolean = true): DecodedBlock = {
+    if (nCols < 0 || nCols > MaxColumns)
+      throw new IOException(s"implausible column count $nCols in Native block")
+    val nRows = in.readVarUInt()
+    if (nRows < 0 || nRows > MaxRows)
+      throw new IOException(s"implausible row count $nRows in Native block")
+    val rows = nRows.toInt
+    val header = Seq.newBuilder[(String, ChType)]
+    val cols = Array.newBuilder[DecodedColumn]
+    var c = 0
+    while (c < nCols) {
+      val name = in.readString()
+      val t = ChType.parse(in.readString())
+      header += name -> t
+      if (projection.forall(_.contains(name))) {
+        val v = new OnHeapColumnVector(rows, t.sparkType)
+        ColumnCodec.decode(in, t, rows, v)
+        cols += DecodedColumn(name, t, v)
+      } else if (lastValues || c < nCols - 1) {
+        try ColumnCodec.skip(in, t, rows)
+        catch {
+          case e: UnsupportedColumnException =>
+            // A column of unknowable byte width makes the remaining
+            // columns unreachable — fail with the column named instead
+            // of a bare type error (the reference instead silently
+            // misparses, src/lib.rs:168-170).
+            throw new IOException(
+              s"cannot skip column '$name' of unsupported type ${e.typeName}; " +
+                "remaining columns unreadable", e)
+        }
+      }
+      c += 1
+    }
+    DecodedBlock(header.result(), cols.result(), rows)
+  }
+
   /**
    * Read just the first block's per-column (name, type) headers —
    * bind-time schema inference without materializing data
@@ -94,31 +153,7 @@ object NativeBlockReader {
     val in = new Input(new BufferedInputStream(stream, 8 * 1024))
     in.tryReadVarUInt() match {
       case None => Seq.empty
-      case Some(nColsL) =>
-        val nCols = nColsL.toInt
-        val nRows = in.readVarUInt().toInt
-        val out = Seq.newBuilder[(String, ChType)]
-        var c = 0
-        while (c < nCols) {
-          val name = in.readString()
-          val t = ChType.parse(in.readString())
-          out += (name -> t)
-          if (c < nCols - 1) {
-            try ColumnCodec.skip(in, t, nRows)
-            catch {
-              case e: UnsupportedColumnException =>
-                // A non-final column of unknowable byte width makes the
-                // remaining headers unreachable — fail with the column
-                // named instead of a bare type error (the reference
-                // instead silently misparses, src/lib.rs:168-170).
-                throw new java.io.IOException(
-                  s"schema inference: cannot skip column '$name' of " +
-                    s"unsupported type ${e.typeName}; remaining columns unreadable", e)
-            }
-          }
-          c += 1
-        }
-        out.result()
+      case Some(nCols) => readBody(in, nCols, Some(Set.empty), lastValues = false).header
     }
   }
 }

@@ -15,6 +15,10 @@ object NativeCodec {
   final class Input(in: InputStream) {
     private[this] val buf = new Array[Byte](8)
 
+    /** Reusable 64 KiB little-endian window for bulk column decodes. */
+    lazy val scratch: java.nio.ByteBuffer =
+      java.nio.ByteBuffer.allocate(64 * 1024).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+
     def readByte(): Int = {
       val b = in.read()
       if (b < 0) throw new EOFException("unexpected EOF in Native stream")
@@ -95,37 +99,6 @@ object NativeCodec {
       if (len == 0) return ""
       if (len > Int.MaxValue) throw new java.io.IOException(s"string length $len too large")
       sanitize(new String(readBytes(len.toInt), StandardCharsets.UTF_8))
-    }
-
-    /** Raw length-prefixed bytes (no sanitize) — for binary payloads. */
-    def readLenPrefixedBytes(): Array[Byte] = {
-      val len = readVarUInt()
-      readBytes(len.toInt)
-    }
-
-    /**
-     * Length-prefixed string straight to Catalyst's UTF8String.
-     * Fast path: pure-ASCII bytes with no NUL need neither the UTF-8
-     * decode/re-encode round trip nor sanitize — that's the common
-     * case by far, and it's what the hot column-decode loop hits.
-     * Anything with high bytes falls back to the sanitizing decode
-     * (invalid sequences become U+FFFD there and are stripped, parity
-     * with the reference's lossy decode, src/lib.rs:68-76).
-     */
-    def readUtf8(): org.apache.spark.unsafe.types.UTF8String = {
-      val len = readVarUInt()
-      if (len == 0) return org.apache.spark.unsafe.types.UTF8String.EMPTY_UTF8
-      if (len > Int.MaxValue) throw new java.io.IOException(s"string length $len too large")
-      val bytes = readBytes(len.toInt)
-      var i = 0
-      var ascii = true
-      while (ascii && i < bytes.length) {
-        if (bytes(i) <= 0) ascii = false // high bit set, or NUL
-        i += 1
-      }
-      if (ascii) org.apache.spark.unsafe.types.UTF8String.fromBytes(bytes)
-      else org.apache.spark.unsafe.types.UTF8String.fromString(
-        sanitize(new String(bytes, StandardCharsets.UTF_8)))
     }
 
     def readShortLE(): Short = {

@@ -3,7 +3,7 @@ package graft.sources.remote
 import java.io.{BufferedInputStream, BufferedOutputStream, IOException}
 import java.net.{InetSocketAddress, Socket}
 
-import graft.sources.native.NativeBlock
+import graft.sources.native.{BlockSource, DecodedBlock}
 import graft.sources.native.NativeCodec.{Input, Output}
 
 import ChTcpProtocol._
@@ -12,7 +12,7 @@ import ChTcpProtocol._
  * One native-TCP connection to a ClickHouse server: dials, performs
  * the hello/revision handshake eagerly (so a bad address or refused
  * credential fails at connect, not at first read), then runs one
- * query as a [[RemoteBlockSource]].
+ * query as a [[graft.sources.native.BlockSource]].
  *
  * Connection-per-caller, exactly like the transport seam's other
  * implementations: the driver schema probe and every executor
@@ -43,13 +43,13 @@ final class ChTcpClient private (sock: Socket, rawIn: java.io.InputStream,
    * uncompressed, per the protocol.
    */
   def execute(query: String, projection: Option[Set[String]],
-      compress: Boolean = false): RemoteBlockSource = {
+      compress: Boolean = false): BlockSource = {
     val negotiated = hello.negotiated
     writeQuery(out, query, negotiated, compress)
     out.flush()
-    new RemoteBlockSource {
+    new BlockSource {
       private var done = false
-      private def blockBody(proj: Option[Set[String]]): NativeBlock = {
+      private def blockBody(proj: Option[Set[String]]): DecodedBlock = {
         in.readString() // temporary-table name
         if (compress) {
           // per-block frame window; do NOT close (that would close the
@@ -58,7 +58,7 @@ final class ChTcpClient private (sock: Socket, rawIn: java.io.InputStream,
           readBlockBody(new Input(frames), negotiated, proj)
         } else readBlockBody(in, negotiated, proj)
       }
-      override def nextBlock(): Option[NativeBlock] = {
+      override def nextBlock(): Option[DecodedBlock] = {
         if (done) return None
         while (true) {
           in.readVarUInt() match {

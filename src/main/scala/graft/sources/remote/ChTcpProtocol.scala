@@ -2,7 +2,7 @@ package graft.sources.remote
 
 import java.io.IOException
 
-import graft.sources.native.{ChType, ColumnCodec, NativeBlock, NativeColumn}
+import graft.sources.native.{DecodedBlock, NativeBlockReader}
 import graft.sources.native.NativeCodec.{Input, Output}
 
 /**
@@ -36,7 +36,7 @@ import graft.sources.native.NativeCodec.{Input, Output}
  * distributed depth, initial query start time), old enough that block
  * bodies carry no custom-serialization flags (introduced at 54454) —
  * so a negotiated block is wire-identical to the Native FILE block
- * layout and [[ColumnCodec]] decodes both.
+ * layout and [[NativeBlockReader.readBody]] parses both.
  *
  * ChTcpProtocolSpec pins the exact bytes of both handshake directions
  * as hand-derived golden vectors and replays a recorded server
@@ -220,11 +220,11 @@ object ChTcpProtocol {
   /**
    * One protocol block: temporary-table name, BlockInfo, then the same
    * (n_cols, n_rows, per-column name/type/values) layout as the Native
-   * file format — decoded by the shared [[ColumnCodec]]. Unlike the
-   * file reader, a zero-row block here is NOT a terminator: servers
-   * send the schema as a rowless header block before any data.
+   * file format — parsed by the shared [[NativeBlockReader.readBody]].
+   * Unlike the file reader, a zero-row block here is NOT a terminator:
+   * servers send the schema as a rowless header block before any data.
    */
-  def readBlock(in: Input, negotiated: Long, projection: Option[Set[String]]): NativeBlock = {
+  def readBlock(in: Input, negotiated: Long, projection: Option[Set[String]]): DecodedBlock = {
     in.readString() // temporary-table name (empty for results)
     readBlockBody(in, negotiated, projection)
   }
@@ -232,40 +232,9 @@ object ChTcpProtocol {
   /** Block body only — what travels inside compressed frames when the
     * session negotiated compression (the packet code and table name
     * stay outside the frames). */
-  def readBlockBody(in: Input, negotiated: Long, projection: Option[Set[String]]): NativeBlock = {
+  def readBlockBody(in: Input, negotiated: Long, projection: Option[Set[String]]): DecodedBlock = {
     readBlockInfo(in, negotiated)
-    // sanity caps BEFORE toInt: this is network input, and a corrupt or
-    // hostile length here must fail cleanly instead of wrapping
-    // negative (toInt) or driving an allocation OOM
-    val nColsL = in.readVarUInt()
-    val nRowsL = in.readVarUInt()
-    if (nColsL < 0 || nColsL > 1000000)
-      throw new IOException(s"clickhouse tcp: implausible column count $nColsL in block")
-    // Row cap is a plausibility bound, not Int.MaxValue: decodeColumn
-    // pre-allocates O(nRows) per column BEFORE payload bytes arrive, so
-    // a hostile 2^31-row header on a fixed-width column would allocate
-    // multi-GB from the header alone. Real servers cap blocks at
-    // max_block_size (default 65536; practical ceilings are low
-    // millions even with huge settings) — 100M is ~1500× the default
-    // and far beyond anything a server emits, mirroring the 64 MB
-    // frame cap on the compressed path.
-    if (nRowsL < 0 || nRowsL > 100000000L)
-      throw new IOException(s"clickhouse tcp: implausible row count $nRowsL in block")
-    val nCols = nColsL.toInt
-    val nRows = nRowsL.toInt
-    val cols = Array.newBuilder[NativeColumn]
-    var c = 0
-    while (c < nCols) {
-      val name = in.readString()
-      val chType = ChType.parse(in.readString())
-      if (projection.forall(_.contains(name))) {
-        cols += ColumnCodec.decodeColumn(in, name, chType, nRows)
-      } else {
-        ColumnCodec.skip(in, chType, nRows)
-      }
-      c += 1
-    }
-    NativeBlock(cols.result(), nRows)
+    NativeBlockReader.readBody(in, in.readVarUInt(), projection)
   }
 
   /** Progress payload (consumed for flow, not surfaced). */

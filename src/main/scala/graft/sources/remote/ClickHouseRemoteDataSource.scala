@@ -5,17 +5,18 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import graft.sources.native.{ChType, NativeBlockReader, NativeIO, SerializableHadoopConf}
+import graft.sources.native.{BlockSource, ChType, NativeBatchReader, NativeBlockReader, NativeIO,
+  SerializableHadoopConf}
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.ColumnarBatch
 
 /**
  * `clickhouse_remote` — the Spark re-expression of the reference's
@@ -58,7 +59,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
  * init, src/clickhouse_scan.rs:78,126-131) and stringifies every cell
  * into Vec<Vec<String>> then re-parses ints with a silent `0` fallback
  * (:218-227) — schema inference here reads only the first block
- * header, and values decode binary → Catalyst exactly once.
+ * header, and values decode exactly once, from wire bytes straight
+ * into Spark column vectors — the same columnar reader every Native
+ * scan uses ([[graft.sources.native.NativeBatchReader]]).
  */
 class ClickHouseRemoteDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "clickhouse_remote"
@@ -112,20 +115,19 @@ final case class TransportSpec(
    * file/socket transports are raw block byte streams; tcp interleaves
    * blocks with protocol packets, so the seam is block-level.
    */
-  def openSource(projection: Option[Set[String]]): RemoteBlockSource = transport match {
+  def openSource(projection: Option[Set[String]]): BlockSource = transport match {
     case "tcp" =>
       val (host, port) = hostPort
       ChTcpClient.connect(host, port, user, password, database, timeoutMs, tls)
         .execute(query, projection, compress = compression)
     case _ =>
-      val reader = new NativeBlockReader(
+      new NativeBlockReader(
         graft.sources.native.NativeCompression.maybeWrapRead(open(), null), projection)
-      new RemoteBlockSource {
-        override def nextBlock(): Option[graft.sources.native.NativeBlock] =
-          if (reader.hasNext) Some(reader.next()) else None
-        override def close(): Unit = reader.close()
-      }
   }
+
+  /** Where the result comes from, for error messages. */
+  def describe: String =
+    s"clickhouse_remote $transport ${if (transport == "file") responsePath else url}"
 
   /** Bind-time schema: first block's per-column (name, type) headers.
     * On tcp the server sends the rowless header block before result
@@ -137,8 +139,7 @@ final case class TransportSpec(
     case "tcp" =>
       // the server's first Data packet is a rowless header block
       val src = openSource(None)
-      try src.nextBlock().map(_.columns.map(c => c.name -> c.chType).toSeq)
-        .getOrElse(Seq.empty)
+      try src.nextBlock().map(_.header).getOrElse(Seq.empty)
       finally src.close()
     case _ =>
       val stream = graft.sources.native.NativeCompression.maybeWrapRead(open(), null)
@@ -184,12 +185,6 @@ final case class TransportSpec(
     case other =>
       throw new IllegalArgumentException(s"clickhouse_remote: unknown transport '$other'")
   }
-}
-
-/** One open stream of Native blocks from the remote, however carried. */
-trait RemoteBlockSource extends AutoCloseable {
-  /** The next block (zero-row header blocks included), or None at end. */
-  def nextBlock(): Option[graft.sources.native.NativeBlock]
 }
 
 object TransportSpec {
@@ -254,43 +249,17 @@ private[remote] class RemoteScan(required: StructType, spec: TransportSpec)
 
 private[remote] class RemoteReaderFactory(required: StructType)
     extends PartitionReaderFactory {
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
+
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new RemotePartitionReader(partition.asInstanceOf[RemotePartition].spec, required)
+    throw new UnsupportedOperationException("clickhouse_remote scans read columnar batches")
+
+  /** Executor-side: open the transport, one decoded block per batch. */
+  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] = {
+    val spec = partition.asInstanceOf[RemotePartition].spec
+    new NativeBatchReader(spec.describe, spec.openSource(Some(required.fieldNames.toSet)),
+      required, limit = -1)
+  }
 }
 
 private[remote] case class RemotePartition(spec: TransportSpec) extends InputPartition
-
-/** Executor-side: open the transport, stream blocks → InternalRows. */
-private[remote] class RemotePartitionReader(spec: TransportSpec, required: StructType)
-    extends PartitionReader[InternalRow] {
-
-  private val blocks = spec.openSource(Some(required.fieldNames.toSet))
-  private var colValues: Array[Array[Any]] = _
-  private var rowsInBlock = 0
-  private var rowIdx = 0
-  private val row = new GenericInternalRow(required.length)
-
-  override def next(): Boolean = {
-    while (rowIdx >= rowsInBlock) {
-      blocks.nextBlock() match {
-        case None => return false
-        case Some(block) =>
-          val byName = block.columns.map(c => c.name -> c).toMap
-          colValues = required.fields.map(f => byName.get(f.name).map(_.values).orNull)
-          rowsInBlock = block.numRows
-          rowIdx = 0
-      }
-    }
-    var i = 0
-    while (i < required.length) {
-      val c = colValues(i)
-      row.update(i, if (c == null) null else c(rowIdx))
-      i += 1
-    }
-    rowIdx += 1
-    true
-  }
-
-  override def get(): InternalRow = row
-  override def close(): Unit = blocks.close()
-}

@@ -194,8 +194,7 @@ class CodecSpec extends AnyFunSuite {
 
   /** Decode `rows` values of `t` from raw wire bytes. */
   private def decodeBytes(t: ChType, rows: Int, bytes: Array[Byte]): Array[Any] =
-    ColumnCodec.decode(
-      new NativeCodec.Input(new ByteArrayInputStream(bytes)), t, rows)
+    DecodedValues.decode(t, rows, bytes)
 
   private def encodeBytes(t: ChType, values: Array[Any]): Array[Byte] = {
     val bos = new ByteArrayOutputStream()

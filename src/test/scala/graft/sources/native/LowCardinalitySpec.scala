@@ -55,17 +55,17 @@ class LowCardinalitySpec extends AnyFunSuite {
     val blocks = new NativeBlockReader(new ByteArrayInputStream(bytes))
     val b = blocks.next()
     assert(b.numRows === 5)
-    assert(b.columns(0).values.map(String.valueOf(_)).toSeq ===
+    assert(DecodedValues(b.columns(0).vector, b.numRows).map(String.valueOf(_)).toSeq ===
       Seq("x", "y", "z", "y", "x"))
-    assert(b.columns(1).values.toSeq === Seq(0L, 1L, 2L, 3L, 4L))
+    assert(DecodedValues(b.columns(1).vector, b.numRows).toSeq === Seq(0L, 1L, 2L, 3L, 4L))
   }
 
   test("LowCardinality(Nullable(String)): index 0 is NULL (UInt16 indices)") {
     val bytes = buildFile("LowCardinality(Nullable(String))",
       Seq("", "a", "b"), Seq(0, 1, 2, 0, 1), indexWidth = 1)
     val b = new NativeBlockReader(new ByteArrayInputStream(bytes)).next()
-    assert(b.columns(0).values.toSeq.map(v => if (v == null) null else v.toString) ===
-      Seq(null, "a", "b", null, "a"))
+    assert(DecodedValues(b.columns(0).vector, b.numRows).toSeq
+      .map(v => if (v == null) null else v.toString) === Seq(null, "a", "b", null, "a"))
   }
 
   test("pruned LowCardinality column skips correctly (later columns aligned)") {
@@ -75,7 +75,7 @@ class LowCardinalitySpec extends AnyFunSuite {
     val b = blocks.next()
     assert(b.numRows === 3)
     assert(b.columns.map(_.name).toSeq === Seq("id"))
-    assert(b.columns(0).values.toSeq === Seq(0L, 1L, 2L))
+    assert(DecodedValues(b.columns(0).vector, b.numRows).toSeq === Seq(0L, 1L, 2L))
   }
 
   test("DSv2 end-to-end: schema inference + scan over a LowCardinality file") {
@@ -100,7 +100,7 @@ class LowCardinalitySpec extends AnyFunSuite {
     Seq(1, 2, 1, 9).foreach(out.writeByte) // 9 is undeclared
     out.flush()
     val b = new NativeBlockReader(new ByteArrayInputStream(bos.toByteArray)).next()
-    assert(b.columns(0).values.map(String.valueOf(_)).toSeq ===
+    assert(DecodedValues(b.columns(0).vector, b.numRows).map(String.valueOf(_)).toSeq ===
       Seq("ok", "err", "ok", "Unknown(9)"))
   }
 
@@ -112,7 +112,7 @@ class LowCardinalitySpec extends AnyFunSuite {
     out.writeIntLE(1700000000); out.writeIntLE(0)
     out.flush()
     val b = new NativeBlockReader(new ByteArrayInputStream(bos.toByteArray)).next()
-    assert(b.columns(0).values.toSeq === Seq(1700000000000000L, 0L))
+    assert(DecodedValues(b.columns(0).vector, b.numRows).toSeq === Seq(1700000000000000L, 0L))
   }
 
   test("readHeader names the column when an unknown type blocks inference") {

@@ -162,7 +162,7 @@ class NativeSourceSpec extends AnyFunSuite {
     ColumnCodec.encode(out, t, micros)
     out.flush()
     val in = new NativeCodec.Input(new ByteArrayInputStream(bos.toByteArray))
-    val decoded = ColumnCodec.decode(in, t, 2)
+    val decoded = DecodedValues.decode(in, t, 2)
     assert(decoded.toSeq === micros.toSeq)
   }
 
@@ -176,14 +176,105 @@ class NativeSourceSpec extends AnyFunSuite {
     assert(agg.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
   }
 
-  test("array-schema native scans stay on the row path and remain correct") {
+  test("array-schema native scans execute columnar and remain correct") {
     val src = spark.read.parquet(s"${SparkTestBase.sfDir}/embeddings.parquet")
     val dir = tmpDir("rowplan")
     src.write.format("clickhouse_native").mode("overwrite").save(dir)
     val back = spark.read.format("clickhouse_native").load(dir)
     back.collect()
-    assert(!back.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
+    assert(back.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
     assert(back.count() === src.count())
+  }
+
+  private def causes(t: Throwable): Seq[Throwable] =
+    if (t == null) Seq.empty else t +: causes(t.getCause)
+
+  /** The first IOException along `e`'s cause chain that mentions `path`. */
+  private def ioNaming(e: Throwable, path: String): Option[java.io.IOException] =
+    causes(e).collectFirst {
+      case io: java.io.IOException if io.getMessage != null && io.getMessage.contains(path) => io
+    }
+
+  /** A one-block Native file whose header claims `rows` rows of one Int64
+    * column, followed by six real values. */
+  private def claimedRowsFile(tag: String, rows: Long): String = {
+    val f = Files.createTempDirectory(s"graft-native-$tag").resolve("claimed.clickhouse")
+    val bos = new ByteArrayOutputStream()
+    val out = new NativeCodec.Output(bos)
+    out.writeVarUInt(1); out.writeVarUInt(rows)
+    out.writeString("x"); out.writeString("Int64")
+    (0 until 6).foreach(i => out.writeLongLE(i.toLong))
+    out.flush()
+    Files.write(f, bos.toByteArray)
+    f.toString
+  }
+
+  test("block row count 2^32+5 fails naming the file (no Int wrap to 5 rows)") {
+    val f = claimedRowsFile("wrap", (1L << 32) + 5)
+    // schema inference and a scan under a user schema both reject it
+    for (read <- Seq(spark.read, spark.read.schema("x BIGINT"))) {
+      val e = intercept[Exception](read.format("clickhouse_native").load(f).collect())
+      assert(ioNaming(e, f).exists(_.getMessage.contains("implausible row count 4294967301")),
+        e.toString)
+    }
+  }
+
+  test("block row count 2^31-1 fails naming the file (no allocation OOM)") {
+    val f = claimedRowsFile("oom", Int.MaxValue.toLong)
+    for (read <- Seq(spark.read, spark.read.schema("x BIGINT"))) {
+      val e = intercept[Exception](read.format("clickhouse_native").load(f).collect())
+      assert(ioNaming(e, f).exists(_.getMessage.contains("implausible row count 2147483647")),
+        e.toString)
+    }
+  }
+
+  test("a flat-schema file truncated mid-block fails naming the file") {
+    val f = Files.createTempDirectory("graft-native-trunc").resolve("trunc.clickhouse")
+    val bos = new ByteArrayOutputStream()
+    val w = new NativeBlockWriter(bos)
+    import org.apache.spark.unsafe.types.UTF8String
+    (0 until 4).foreach { b =>
+      val ids = Array.tabulate[Any](1000)(i => java.lang.Long.valueOf(b * 1000L + i))
+      val names = Array.tabulate[Any](1000)(i => UTF8String.fromString(s"row-${b * 1000 + i}"))
+      w.writeBlock(NativeBlock(Array(
+        NativeColumn("id", ChType.ChInt64, ids),
+        NativeColumn("name", ChType.ChString, names)), 1000))
+    }
+    w.close()
+    val bytes = bos.toByteArray
+    Files.write(f, bytes.take(bytes.length * 5 / 8)) // inside the third block
+    val truncated = spark.read.format("clickhouse_native").load(f.toString)
+    // the scan and the count(*) block-header walk (no sidecar) both name it
+    for (read <- Seq(() => truncated.collect(), () => truncated.count())) {
+      val e = intercept[Exception](read())
+      assert(ioNaming(e, f.toString).exists(_.getMessage.contains("unexpected EOF")), e.toString)
+    }
+  }
+
+  test("a read schema that mistypes a column fails naming the file and column") {
+    val dir = tmpDir("mistyped")
+    spark.range(0, 10).toDF("id").write.format("clickhouse_native").mode("overwrite").save(dir)
+    val e = intercept[Exception](
+      spark.read.schema("id STRING").format("clickhouse_native").load(dir).collect())
+    assert(!causes(e).exists(_.isInstanceOf[ClassCastException]), e.toString)
+    assert(ioNaming(e, ".clickhouse").exists(io =>
+      io.getMessage.contains("'id'") && io.getMessage.contains("Int64")), e.toString)
+  }
+
+  test("LIMIT over a multi-block file returns exactly n correct rows (flat and array)") {
+    val dir = tmpDir("limit")
+    // 200k rows in one file = four 65536-row blocks
+    spark.range(0, 200000).selectExpr("id", "array(id, id + 1) as xs").coalesce(1)
+      .write.format("clickhouse_native").mode("overwrite").save(dir)
+    val back = spark.read.format("clickhouse_native").load(dir)
+    for (n <- Seq(1, 10, 70000)) { // 70000 crosses the first block boundary
+      val flat = back.select("id").limit(n).collect().map(_.getLong(0))
+      assert(flat.toSeq === (0L until n.toLong), s"flat limit $n")
+      val arrays = back.limit(n).collect()
+      assert(arrays.length === n, s"array limit $n")
+      assert(arrays.forall(r => r.getSeq[Long](1) === Seq(r.getLong(0), r.getLong(0) + 1)))
+      assert(arrays.map(_.getLong(0)).toSeq === (0L until n.toLong), s"array limit $n")
+    }
   }
 
   test("DSv2 roundtrip: map and struct columns (Map/Tuple wire types)") {

@@ -1,7 +1,5 @@
 package graft.sources.native
 
-import java.io.ByteArrayInputStream
-
 import graft.SparkTestBase
 import graft.sources.native.ChType.{ChIPv4, ChIPv6, ChNullable, ChUuid}
 
@@ -25,8 +23,7 @@ class NetworkTypesSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
   private def decodeOne(t: ChType, bytes: Array[Byte], rows: Int): Seq[String] =
-    ColumnCodec.decode(new NativeCodec.Input(new ByteArrayInputStream(bytes)), t, rows)
-      .map(String.valueOf(_)).toSeq
+    DecodedValues.decode(t, rows, bytes).map(String.valueOf(_)).toSeq
 
   test("UUID wire layout: LE(msb) ++ LE(lsb) decodes to the canonical string") {
     // 00010203-0405-0607-0809-0a0b0c0d0e0f: msb = 0x0001020304050607,
@@ -60,9 +57,7 @@ class NetworkTypesSpec extends AnyFunSuite {
     val bos = new java.io.ByteArrayOutputStream()
     ColumnCodec.encode(new NativeCodec.Output(new java.io.DataOutputStream(bos)),
       ChNullable(ChUuid), uuids)
-    val back = ColumnCodec.decode(
-      new NativeCodec.Input(new ByteArrayInputStream(bos.toByteArray)),
-      ChNullable(ChUuid), 3)
+    val back = DecodedValues.decode(ChNullable(ChUuid), 3, bos.toByteArray)
     assert(String.valueOf(back(0)) === "123e4567-e89b-12d3-a456-426614174000")
     assert(String.valueOf(back(1)) === "ffffffff-ffff-ffff-ffff-ffffffffffff")
     assert(back(2) === null)

@@ -138,7 +138,9 @@ class RoundtripPropertySpec extends AnyFunSuite {
       while (reader.hasNext) {
         val blk = reader.next()
         totalRows += blk.numRows
-        blk.columns.zipWithIndex.foreach { case (c, ci) => got(ci) ++= c.values }
+        blk.columns.zipWithIndex.foreach { case (c, ci) =>
+          got(ci) ++= DecodedValues(c.vector, blk.numRows)
+        }
       }
       assert(totalRows === nRows, s"case $case_i rows (types=${types.map(_.name).mkString(",")})")
       types.indices.foreach { ci =>

@@ -41,6 +41,45 @@ class RemoteSourceSpec extends AnyFunSuite {
         .select("n_name").collect().map(_.getString(0)).toSet)
   }
 
+  test("file transport reads Array, Map, Nullable and LowCardinality columns") {
+    import graft.sources.native.{ChType, NativeBlock, NativeBlockWriter, NativeColumn}
+    import graft.sources.native.ChType._
+    import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
+    import org.apache.spark.unsafe.types.UTF8String
+    def str(s: String): Any = UTF8String.fromString(s)
+    val rows = (0 until 10).map { i =>
+      (Seq.tabulate(i % 4)(j => i * 10L + j), Map("k" -> i.toLong, "sq" -> i.toLong * i),
+        if (i % 3 == 0) null else s"n$i", s"tag${i % 2}")
+    }
+    val resp = java.nio.file.Files.createTempDirectory("graft-remote-nested")
+      .resolve("resp.native")
+    val w = new NativeBlockWriter(java.nio.file.Files.newOutputStream(resp))
+    rows.grouped(4).foreach { block => // three blocks: 4 + 4 + 2 rows
+      def col(name: String, t: ChType)(f: ((Seq[Long], Map[String, Long], String, String)) => Any) =
+        NativeColumn(name, t, block.map(f).toArray)
+      w.writeBlock(NativeBlock(Array(
+        col("xs", ChArray(ChInt64))(r => new GenericArrayData(r._1.toArray[Any])),
+        col("m", ChMap(ChString, ChInt64)) { r =>
+          new ArrayBasedMapData(new GenericArrayData(r._2.keys.map(str).toArray),
+            new GenericArrayData(r._2.values.toArray[Any]))
+        },
+        col("n", ChNullable(ChString))(r => Option(r._3).map(str).orNull),
+        col("tag", ChLowCardinality(ChString))(r => str(r._4))), block.length))
+    }
+    w.close()
+    val df = spark.read.format("clickhouse_remote")
+      .option("query", "SELECT xs, m, n, tag FROM t")
+      .option("transport", "file")
+      .option("responsePath", resp.toString)
+      .load()
+    assert(df.schema.map(_.dataType.simpleString) ===
+      Seq("array<bigint>", "map<string,bigint>", "string", "string"))
+    val back = df.collect().map(r =>
+      (r.getSeq[Long](0), r.getMap[String, Long](1).toMap, r.getString(2), r.getString(3)))
+    assert(back.toSeq === rows)
+    assert(df.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
+  }
+
   test("missing query option fails clearly") {
     val e = intercept[Exception] {
       spark.read.format("clickhouse_remote")
