@@ -10,13 +10,13 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{aggregate, Transform}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
+import org.apache.spark.sql.execution.graft.RowToColumns
+import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableColumnVector}
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -875,59 +875,41 @@ private[native] class NativeWriteBuilder(schema: StructType, path: String, maxRo
         throw new IllegalArgumentException(
           s"clickhouse_native write: sortBy column '$col' not in input schema")
     }
-    if (bucket.isEmpty && sortBy.isEmpty)
-      new Write {
-        override def toBatch: BatchWrite =
-          new NativeBatchWrite(schema, path, truncateFirst, maxRowsPerFile, dictEncode,
-            compression, bucket, insertDedup, dedupToken, typeOverrides)
-        override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
-          // validated but not implemented for streaming epochs — fail
-          // loudly rather than silently appending duplicate batches
-          // the user asked to have deduplicated
-          if (insertDedup) throw new UnsupportedOperationException(
-            "clickhouse_native: insertDedup is not supported for streaming writes " +
-              "(exactly-once replay protection comes from the epoch-scoped sink itself)")
-          new NativeStreamingWrite(schema, path, maxRowsPerFile, dictEncode, compression, bucket, typeOverrides)
-        }
+    // Cluster the incoming rows by bucket id BEFORE the writers run:
+    // each bucket then lands in exactly ONE write task, so an insert
+    // produces N part files total instead of up to tasks × N (at
+    // 100 TB ingest, the difference between N and hundreds of
+    // thousands of small files). sortBy columns additionally sort
+    // rows WITHIN each task, so every block's zone maps cover a
+    // disjoint range and range scans prune to O(matching blocks).
+    // Advisory, not strict — if the bucket function can't be
+    // resolved Spark writes unclustered and the per-row routing
+    // still produces correct (more numerous) single-bucket files.
+    // With neither, the distribution is unspecified and the ordering
+    // empty, and Spark plans the write as it comes.
+    new Write with RequiresDistributionAndOrdering {
+      import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
+      import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
+      override def requiredDistribution(): Distribution = bucket match {
+        case Some((col, n)) => Distributions.clustered(Array(Expressions.bucket(n, col)))
+        case None => Distributions.unspecified()
       }
-    else
-      // Cluster the incoming rows by bucket id BEFORE the writers run:
-      // each bucket then lands in exactly ONE write task, so an insert
-      // produces N part files total instead of up to tasks × N (at
-      // 100 TB ingest, the difference between N and hundreds of
-      // thousands of small files). sortBy columns additionally sort
-      // rows WITHIN each task, so every block's zone maps cover a
-      // disjoint range and range scans prune to O(matching blocks).
-      // Advisory, not strict — if the bucket function can't be
-      // resolved Spark writes unclustered and the per-row routing
-      // still produces correct (more numerous) single-bucket files.
-      new Write with RequiresDistributionAndOrdering {
-        import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection}
-        override def requiredDistribution(): org.apache.spark.sql.connector.distributions.Distribution =
-          bucket match {
-            case Some((col, n)) =>
-              org.apache.spark.sql.connector.distributions.Distributions.clustered(
-                Array(Expressions.bucket(n, col)))
-            case None =>
-              org.apache.spark.sql.connector.distributions.Distributions.unspecified()
-          }
-        override def distributionStrictlyRequired(): Boolean = false
-        override def requiredOrdering(): Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-          sortBy.map(c =>
-            Expressions.sort(Expressions.column(c), SortDirection.ASCENDING)).toArray
-        override def toBatch: BatchWrite =
-          new NativeBatchWrite(schema, path, truncateFirst, maxRowsPerFile, dictEncode,
-            compression, bucket, insertDedup, dedupToken, typeOverrides)
-        override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
-          // validated but not implemented for streaming epochs — fail
-          // loudly rather than silently appending duplicate batches
-          // the user asked to have deduplicated
-          if (insertDedup) throw new UnsupportedOperationException(
-            "clickhouse_native: insertDedup is not supported for streaming writes " +
-              "(exactly-once replay protection comes from the epoch-scoped sink itself)")
-          new NativeStreamingWrite(schema, path, maxRowsPerFile, dictEncode, compression, bucket, typeOverrides)
-        }
+      override def distributionStrictlyRequired(): Boolean = false
+      override def requiredOrdering(): Array[SortOrder] =
+        sortBy.map(c => Expressions.sort(Expressions.column(c), SortDirection.ASCENDING)).toArray
+      override def toBatch: BatchWrite =
+        new NativeBatchWrite(schema, path, truncateFirst, maxRowsPerFile, dictEncode,
+          compression, bucket, insertDedup, dedupToken, typeOverrides)
+      override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
+        // validated but not implemented for streaming epochs — fail
+        // loudly rather than silently appending duplicate batches
+        // the user asked to have deduplicated
+        if (insertDedup) throw new UnsupportedOperationException(
+          "clickhouse_native: insertDedup is not supported for streaming writes " +
+            "(exactly-once replay protection comes from the epoch-scoped sink itself)")
+        new NativeStreamingWrite(schema, path, maxRowsPerFile, dictEncode, compression, bucket, typeOverrides)
       }
+    }
   }
 }
 
@@ -953,8 +935,8 @@ private[native] class NativeStreamingWrite(schema: StructType, path: String,
     val dir = new Path(path)
     val fs = dir.getFileSystem(conf.value)
     fs.mkdirs(dir)
-    NativeStreamingWriterFactory(schema, path, maxRowsPerFile, dictEncode, conf, compression,
-      bucket, java.util.UUID.randomUUID().toString.substring(0, 8), typeOverrides)
+    NativeWriterFactory(schema, path, maxRowsPerFile, dictEncode, conf, compression,
+      bucket, java.util.UUID.randomUUID().toString.substring(0, 8), typeOverrides = typeOverrides)
   }
 
   // Epoch commit is recorded by the streaming engine's own offset/commit
@@ -984,27 +966,6 @@ private[native] class NativeStreamingWrite(schema: StructType, path: String,
     }
   }
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-/** Ships to executors — a named case class so only serializable fields travel. */
-private[native] case class NativeStreamingWriterFactory(schema: StructType, path: String,
-    maxRowsPerFile: Int, dictEncode: Boolean, conf: SerializableHadoopConf,
-    compression: String = "none", bucket: Option[(String, Int)] = None,
-    writeToken: String = "w0", typeOverrides: Map[String, String] = Map.empty)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] = {
-    val prefix = f"epoch-$epochId%08d-"
-    bucket match {
-      case Some((col, n)) =>
-        new BucketedNativeDataWriter(schema, path, partitionId, taskId, maxRowsPerFile,
-          conf.value, col, n, prefix, dictEncode, compression, writeToken,
-          typeOverrides = typeOverrides)
-      case None =>
-        new NativeDataWriter(schema, path, partitionId, taskId, maxRowsPerFile, conf.value,
-          filePrefix = prefix, dictEncode = dictEncode, compression = compression,
-          writeToken = writeToken, typeOverrides = typeOverrides)
-    }
-  }
 }
 
 private[native] class NativeBatchWrite(schema: StructType, path: String, truncateFirst: Boolean,
@@ -1047,7 +1008,7 @@ private[native] class NativeBatchWrite(schema: StructType, path: String, truncat
     // gone. The old files are removed at commit() instead, so readers
     // of this very write's input stay consistent and an aborted
     // overwrite leaves the previous data fully intact.
-    new NativeWriterFactory(schema, path, maxRowsPerFile, dictEncode, conf, compression,
+    NativeWriterFactory(schema, path, maxRowsPerFile, dictEncode, conf, compression,
       bucket, writeToken, dedupToken, typeOverrides)
   }
 
@@ -1169,22 +1130,32 @@ private[native] class NativeBatchWrite(schema: StructType, path: String, truncat
   }
 }
 
-private[native] class NativeWriterFactory(schema: StructType, path: String,
+/**
+ * The task-writer factory of batch and streaming writes alike. Ships to
+ * executors — a named case class so only serializable fields travel. A
+ * streaming writer's part names start with its epoch.
+ */
+private[native] case class NativeWriterFactory(schema: StructType, path: String,
     maxRowsPerFile: Int, dictEncode: Boolean, conf: SerializableHadoopConf,
     compression: String = "none", bucket: Option[(String, Int)] = None,
     writeToken: String = "w0", dedupToken: String = "",
     typeOverrides: Map[String, String] = Map.empty)
-    extends DataWriterFactory {
+    extends DataWriterFactory with org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
+    writer(partitionId, taskId, "")
+
+  override def createWriter(partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
+    writer(partitionId, taskId, f"epoch-$epochId%08d-")
+
+  private def writer(partitionId: Int, taskId: Long, filePrefix: String): DataWriter[InternalRow] =
     bucket match {
       case Some((col, n)) =>
         new BucketedNativeDataWriter(schema, path, partitionId, taskId, maxRowsPerFile,
-          conf.value, col, n, "", dictEncode, compression, writeToken, dedupToken,
+          conf.value, col, n, filePrefix, dictEncode, compression, writeToken, dedupToken,
           typeOverrides)
       case None =>
         new NativeDataWriter(schema, path, partitionId, taskId, maxRowsPerFile, conf.value,
-          dictEncode = dictEncode, compression = compression, writeToken = writeToken,
-          dedupToken = dedupToken, typeOverrides = typeOverrides)
+          filePrefix, dictEncode, compression, writeToken, dedupToken, typeOverrides)
     }
 }
 
@@ -1232,8 +1203,11 @@ private[native] class BucketedNativeDataWriter(schema: StructType, dir: String,
 }
 
 /**
- * Task-side writer: buffers rows and emits 64k-row Native blocks.
- * (The reference has no write path at all; fixtures required a real
+ * Task-side writer: appends rows into one Spark column vector per
+ * column with Spark's own row-to-column converter (which copies each
+ * value's bytes, so the reused input row never aliases a buffered one)
+ * and emits 64k-row Native blocks encoded from those vectors. (The
+ * reference has no write path at all; fixtures required a real
  * ClickHouse — README.md:43-47.)
  */
 private[native] class NativeDataWriter(schema: StructType, dir: String,
@@ -1279,12 +1253,12 @@ private[native] class NativeDataWriter(schema: StructType, dir: String,
       if (!lcEligible || buffered < 64) t
       else {
         val limit = math.min(65536, buffered / 2)
-        val seen = new java.util.HashSet[Any]()
+        val v = vectors(i)
+        val seen = new java.util.HashSet[UTF8String]()
         var j = 0
         var distinct = 0
         while (j < buffered && distinct <= limit) {
-          val v = buffer(i)(j)
-          if (v != null && seen.add(v)) distinct += 1
+          if (!v.isNullAt(j) && seen.add(v.getUTF8String(j))) distinct += 1
           j += 1
         }
         if (distinct <= limit) ChType.ChLowCardinality(t) else t
@@ -1303,7 +1277,11 @@ private[native] class NativeDataWriter(schema: StructType, dir: String,
   // block offsets of the current file, for the NativeIndex sidecar
   // that makes our own output intra-file splittable on read
   private val blockIndex = scala.collection.mutable.ArrayBuffer.empty[NativeIndex.BlockEntry]
-  private val buffer = Array.fill(schema.length)(new scala.collection.mutable.ArrayBuffer[Any](rowsPerBlock))
+  // Vectors start small and grow with the appends; reset() keeps their
+  // capacity for the next block, so a task holds one block's values.
+  private val vectors: Array[WritableColumnVector] =
+    schema.fields.map(f => new OnHeapColumnVector(1024, f.dataType))
+  private val append = RowToColumns(schema)
   private var buffered = 0
 
   /**
@@ -1316,14 +1294,13 @@ private[native] class NativeDataWriter(schema: StructType, dir: String,
     val out = Map.newBuilder[String, NativeIndex.ColStat]
     var i = 0
     while (i < schema.length) {
-      val vals = buffer(i)
-      def longStats(get: Any => Long): Unit = {
+      val v = vectors(i)
+      def longStats(get: Int => Long): Unit = {
         var mn = Long.MaxValue; var mx = Long.MinValue; var seen = false
         var j = 0
-        while (j < vals.length) {
-          val v = vals(j)
-          if (v != null) {
-            val x = get(v)
+        while (j < buffered) {
+          if (!v.isNullAt(j)) {
+            val x = get(j)
             if (x < mn) mn = x
             if (x > mx) mx = x
             seen = true
@@ -1333,19 +1310,15 @@ private[native] class NativeDataWriter(schema: StructType, dir: String,
         if (seen) out += schema.fields(i).name -> NativeIndex.ColStat('l', mn.toString, mx.toString)
       }
       schema.fields(i).dataType match {
-        case IntegerType | DateType => longStats(_.asInstanceOf[Int].toLong)
-        case LongType | TimestampType | TimestampNTZType => longStats(_.asInstanceOf[Long])
-        case DoubleType | FloatType =>
+        case IntegerType | DateType => longStats(v.getInt(_).toLong)
+        case LongType | TimestampType | TimestampNTZType => longStats(v.getLong)
+        case dt @ (DoubleType | FloatType) =>
           var mn = Double.PositiveInfinity; var mx = Double.NegativeInfinity
           var seen = false; var clean = true
           var j = 0
-          while (clean && j < vals.length) {
-            val v = vals(j)
-            if (v != null) {
-              val x = v match {
-                case d: java.lang.Double => d.doubleValue()
-                case f: java.lang.Float => f.doubleValue()
-              }
+          while (clean && j < buffered) {
+            if (!v.isNullAt(j)) {
+              val x = if (dt == DoubleType) v.getDouble(j) else v.getFloat(j).toDouble
               if (java.lang.Double.isNaN(x) || java.lang.Double.isInfinite(x)) clean = false
               else {
                 if (x < mn) mn = x
@@ -1369,10 +1342,9 @@ private[native] class NativeDataWriter(schema: StructType, dir: String,
           var mx: UTF8String = null
           var clean = true
           var j = 0
-          while (clean && j < vals.length) {
-            val v = vals(j)
-            if (v != null) {
-              val u = v.asInstanceOf[UTF8String]
+          while (clean && j < buffered) {
+            if (!v.isNullAt(j)) {
+              val u = v.getUTF8String(j)
               val s = u.toString
               if (s.indexOf('\u0000') >= 0 || s.indexOf('\uFFFD') >= 0) clean = false
               else {
@@ -1428,23 +1400,7 @@ private[native] class NativeDataWriter(schema: StructType, dir: String,
   }
 
   override def write(record: InternalRow): Unit = {
-    var i = 0
-    while (i < schema.length) {
-      // Spark reuses the InternalRow (and the UTF8String/ArrayData/
-      // MapData backing buffers) across rows — buffering a reference
-      // without copying aliases later rows' bytes and corrupts the file.
-      val v =
-        if (record.isNullAt(i)) null
-        else record.get(i, schema.fields(i).dataType) match {
-          case s: UTF8String => s.clone()
-          case a: ArrayData  => a.copy()
-          case m: org.apache.spark.sql.catalyst.util.MapData => m.copy()
-          case r: InternalRow => r.copy()
-          case other         => other
-        }
-      buffer(i) += v
-      i += 1
-    }
+    append(record, vectors)
     buffered += 1
     // blocks never straddle the file cap: flush at least every
     // min(block, file) rows so rotation boundaries stay exact
@@ -1461,12 +1417,12 @@ private[native] class NativeDataWriter(schema: StructType, dir: String,
       // the cap isn't a multiple of the block size.
       if (writer == null || (rowsInFile > 0 && rowsInFile + buffered > rowsPerFile)) rotate()
       val cols = schema.fields.indices.map { i =>
-        NativeColumn(schema.fields(i).name, effectiveTypes(i), buffer(i).toArray)
+        NativeColumn(schema.fields(i).name, effectiveTypes(i), vectors(i))
       }.toArray
       blockIndex += NativeIndex.BlockEntry(writer.position, buffered.toLong, blockStats())
       writer.writeBlock(NativeBlock(cols, buffered))
       rowsInFile += buffered
-      buffer.foreach(_.clear())
+      vectors.foreach(_.reset())
       buffered = 0
     }
   }
@@ -1489,7 +1445,7 @@ private[native] class NativeDataWriter(schema: StructType, dir: String,
       if (fs.exists(idx)) fs.delete(idx, false)
     }
   }
-  override def close(): Unit = ()
+  override def close(): Unit = vectors.foreach(_.close())
 }
 
 private[native] case class NativeCommitMessage(files: Seq[String]) extends WriterCommitMessage

@@ -7,24 +7,43 @@ import java.nio.charset.StandardCharsets.UTF_8
 import graft.sources.native.ChType._
 import graft.sources.native.NativeCodec.{Input, Output}
 
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.execution.vectorized.{Dictionary, OnHeapColumnVector, WritableColumnVector}
+import org.apache.spark.sql.execution.graft.RowToColumns
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.vectorized.ColumnarArray
 
 /**
- * One column of a block to WRITE: `values` holds Catalyst values
- * (UTF8String, java.lang.Integer/Long/Boolean/Float/Double, Decimal,
- * ArrayData, MapData, InternalRow, or null) in row order.
+ * One column of a Native block: its wire name, its wire type and the
+ * Spark vector that holds its values, in both directions. A read block
+ * decodes into `vector` (of `chType.sparkType`); a block to write is
+ * encoded from it ([[ColumnCodec.encode]], the inverse of decode). The
+ * data writer appends rows into the vector with Spark's own
+ * row-to-column converter, so a Spark byte or short column arrives as a
+ * ByteType or ShortType vector under an Int8/Int16 wire type.
  */
-final case class NativeColumn(name: String, chType: ChType, values: Array[Any])
+final case class NativeColumn(name: String, chType: ChType, vector: WritableColumnVector)
 
-/** A block to write: its columns and row count (SURVEY §1.1). */
+object NativeColumn {
+  /**
+   * A column built from Catalyst values (UTF8String, boxed primitives,
+   * Decimal, ArrayData, MapData, InternalRow or null, in row order),
+   * appended into a vector by the same converter the data writer uses.
+   * An input adapter for fixtures and hand-built files; it encodes
+   * nothing itself.
+   */
+  def apply(name: String, chType: ChType, values: Array[Any]): NativeColumn = {
+    val v = new OnHeapColumnVector(values.length, chType.sparkType)
+    val append = RowToColumns(new StructType().add(name, chType.sparkType))
+    val vs = Array[WritableColumnVector](v)
+    values.foreach(x => append(new GenericInternalRow(Array[Any](x)), vs))
+    NativeColumn(name, chType, v)
+  }
+}
+
+/** A block to write: its columns, each vector holding `numRows` values,
+  * and its row count (SURVEY §1.1). */
 final case class NativeBlock(columns: Array[NativeColumn], numRows: Int)
-
-/** One column of a READ block: wire name, wire type, and the Spark vector
-  * (of `chType.sparkType`) its values were decoded into. */
-final case class DecodedColumn(name: String, chType: ChType, vector: WritableColumnVector)
 
 /**
  * A decoded Native block. `header` lists every column's (name, type)
@@ -33,7 +52,7 @@ final case class DecodedColumn(name: String, chType: ChType, vector: WritableCol
  * columns — a fully-pruned block (`count(*)`: Catalyst requires zero
  * columns) still knows how many rows it carries.
  */
-final case class DecodedBlock(header: Seq[(String, ChType)], columns: Array[DecodedColumn],
+final case class DecodedBlock(header: Seq[(String, ChType)], columns: Array[NativeColumn],
     numRows: Int)
 
 /**
@@ -42,12 +61,15 @@ final case class DecodedBlock(header: Seq[(String, ChType)], columns: Array[Deco
  * else degraded to a sentinel string); ours covers the full §1.3
  * family and nests Nullable/Array/Map/Tuple.
  *
- * There is one decode path: wire bytes go straight into Spark column
+ * A Spark column vector is the one in-memory form of a column, in both
+ * directions. There is one decode path: wire bytes go straight into
  * vectors, column-at-a-time — the columnar layout the wire format
  * already has — rather than the reference's row-at-a-time boxed-enum
  * cells (src/lib.rs:28-35). Every Native scan and every remote read
- * hands those vectors to Spark as `ColumnarBatch`es, so no value is
- * boxed between the wire and the query.
+ * hands those vectors to Spark as `ColumnarBatch`es. And there is one
+ * encode path, [[encode]], the exact inverse of [[decode]] over the
+ * same vectors: re-encoding a decoded block reproduces its bytes. No
+ * value is boxed between the wire and the query, either way.
  */
 object ColumnCodec {
 
@@ -258,11 +280,14 @@ object ColumnCodec {
    * `len` bytes of text into row `i`. Pure-ASCII bytes without NUL —
    * by far the common case — pass through as they are; anything else
    * goes through the lossy UTF-8 decode with NUL and U+FFFD stripped
-   * (parity with the reference's sanitize, src/lib.rs:68-76).
+   * (parity with the reference's sanitize, src/lib.rs:68-76). A value
+   * longer than the scratch window is read as its bytes arrive
+   * ([[Input.readBytes]]), never allocated at its claimed length.
    */
   private def putText(in: Input, v: WritableColumnVector, i: Int, len: Int): Unit = {
-    val b = if (len <= in.scratch.capacity) in.scratch.array else new Array[Byte](len)
-    in.readFully(b, 0, len)
+    val b =
+      if (len > in.scratch.capacity) in.readBytes(len)
+      else { in.readFully(in.scratch.array, 0, len); in.scratch.array }
     var ascii = true
     var k = 0
     while (ascii && k < len) { if (b(k) <= 0) ascii = false; k += 1 }
@@ -275,8 +300,9 @@ object ColumnCodec {
     v.putByteArray(i, b, 0, b.length)
   }
 
-  /** `rows` cumulative UInt64 end offsets into `v`'s (offset, length)
-    * slots; returns the element count of the flattened child stream. */
+  /** `rows` cumulative UInt64 end offsets, checked to rise and to fit an
+    * Int, into `v`'s (offset, length) slots (none when `v` is null, for
+    * skip); returns the element count of the flattened child stream. */
   private def offsets(in: Input, rows: Int, v: WritableColumnVector): Int = {
     var start = 0L
     chunks(in, rows, 8) { (b, first, n) =>
@@ -285,7 +311,7 @@ object ColumnCodec {
         val end = b.getLong(8 * j)
         if (end < start || end > Int.MaxValue)
           throw new IOException(s"Native array offset $end out of range after $start")
-        v.putArray(first + j, start.toInt, (end - start).toInt)
+        if (v != null) v.putArray(first + j, start.toInt, (end - start).toInt)
         start = end
         j += 1
       }
@@ -320,25 +346,13 @@ object ColumnCodec {
    */
   private def decodeLowCardinality(in: Input, lc: ChLowCardinality, rows: Int,
       v: WritableColumnVector): Unit = {
-    val version = in.readLongLE()
-    if (version != 1L)
-      throw new UnsupportedColumnException(s"${lc.name} (keys version $version)")
-    val serType = in.readLongLE()
-    if ((serType & LcHasAdditionalKeys) == 0)
-      throw new UnsupportedColumnException(s"${lc.name} (global dictionary)")
-    val (inner, nullable) = lc.inner match {
-      case ChNullable(i) => (i, true)
-      case i => (i, false)
-    }
+    val width = lowCardinalityIndexWidth(in, lc)
+    val (inner, nullable) = lowCardinalityInner(lc)
     val dictSize = narrow(in.readLongLE())
     val dict = new OnHeapColumnVector(dictSize, inner.sparkType)
     decode(in, inner, dictSize, dict)
-    val n = in.readLongLE()
-    if (n != rows) throw new IOException(s"LowCardinality row count $n != block rows $rows")
+    lowCardinalityRows(in, rows)
     val ids = new Array[Int](rows)
-    val width = (serType & LcIndexWidthMask).toInt match {
-      case 0 => 1; case 1 => 2; case 2 => 4; case _ => 8
-    }
     chunks(in, rows, width) { (b, first, n) =>
       var j = 0
       while (j < n) {
@@ -377,15 +391,46 @@ object ColumnCodec {
     dict.close()
   }
 
+  /** The keys version and serialization type that open a LowCardinality
+    * column; returns the byte width of its indices. */
+  private def lowCardinalityIndexWidth(in: Input, lc: ChLowCardinality): Int = {
+    val version = in.readLongLE()
+    if (version != 1L)
+      throw new UnsupportedColumnException(s"${lc.name} (keys version $version)")
+    val serType = in.readLongLE()
+    if ((serType & LcHasAdditionalKeys) == 0)
+      throw new UnsupportedColumnException(s"${lc.name} (global dictionary)")
+    (serType & LcIndexWidthMask).toInt match {
+      case 0 => 1; case 1 => 2; case 2 => 4; case _ => 8
+    }
+  }
+
+  /** The row count between a LowCardinality dictionary and its indices,
+    * which must equal the block's. */
+  private def lowCardinalityRows(in: Input, rows: Int): Unit = {
+    val n = in.readLongLE()
+    if (n != rows) throw new IOException(s"LowCardinality row count $n != block rows $rows")
+  }
+
+  /** The dictionary type of a LowCardinality column, and whether index 0 means null. */
+  private def lowCardinalityInner(lc: ChLowCardinality): (ChType, Boolean) = lc.inner match {
+    case ChNullable(i) => (i, true)
+    case i => (i, false)
+  }
+
   /** Row `j` of scalar vector `src` into row `i` of `dst` (same type). */
   private def copyValue(src: WritableColumnVector, j: Int, dst: WritableColumnVector, i: Int): Unit =
-    src.dataType match {
+    if (src.isNullAt(j)) dst.putNull(i)
+    else src.dataType match {
       case BooleanType => dst.putBoolean(i, src.getBoolean(j))
+      case ByteType => dst.putByte(i, src.getByte(j))
+      case ShortType => dst.putShort(i, src.getShort(j))
       case IntegerType | DateType => dst.putInt(i, src.getInt(j))
       case LongType | TimestampType | TimestampNTZType => dst.putLong(i, src.getLong(j))
       case FloatType => dst.putFloat(i, src.getFloat(j))
       case DoubleType => dst.putDouble(i, src.getDouble(j))
       case d: DecimalType => dst.putDecimal(i, src.getDecimal(j, d.precision, d.scale), d.precision)
+      case StringType => val b = src.getBinary(j); dst.putByteArray(i, b, 0, b.length)
       case other => throw new UnsupportedColumnException(s"LowCardinality(${other.simpleString})")
     }
 
@@ -427,55 +472,46 @@ object ColumnCodec {
       in.skipFully(fixedWidth(t).get.toLong * rows)
     case ChString =>
       var i = 0
-      while (i < rows) { in.skipFully(in.readVarUInt()); i += 1 }
+      while (i < rows) { in.skipFully(narrow(in.readVarUInt())); i += 1 }
     case ChNullable(inner) =>
       in.skipFully(rows.toLong)
       skip(in, inner, rows)
     case ChArray(inner) =>
-      var last = 0L
-      var i = 0
-      while (i < rows) { last = in.readLongLE(); i += 1 }
-      skip(in, inner, last.toInt)
+      skip(in, inner, offsets(in, rows, null))
     case ChMap(kt, vt) =>
-      var last = 0L
-      var i = 0
-      while (i < rows) { last = in.readLongLE(); i += 1 }
-      skip(in, kt, last.toInt)
-      skip(in, vt, last.toInt)
+      val total = offsets(in, rows, null)
+      skip(in, kt, total)
+      skip(in, vt, total)
     case ChTuple(fields) =>
       fields.foreach { case (_, ft) => skip(in, ft, rows) }
     case lc: ChLowCardinality =>
       // must parse the dictionary structure to find the column's end
-      val version = in.readLongLE()
-      if (version != 1L) throw new UnsupportedColumnException(lc.name)
-      val serType = in.readLongLE()
-      if ((serType & LcHasAdditionalKeys) == 0)
-        throw new UnsupportedColumnException(lc.name)
-      val inner = lc.inner match { case ChNullable(i) => i; case i => i }
-      val dictSize = in.readLongLE().toInt
-      skip(in, inner, dictSize)
-      val n = in.readLongLE().toInt
-      val width = (serType & LcIndexWidthMask).toInt match {
-        case 0 => 1; case 1 => 2; case 2 => 4; case _ => 8
-      }
-      in.skipFully(width.toLong * n)
+      val width = lowCardinalityIndexWidth(in, lc)
+      skip(in, lowCardinalityInner(lc)._1, narrow(in.readLongLE()))
+      lowCardinalityRows(in, rows)
+      in.skipFully(width.toLong * rows)
     case other => throw new UnsupportedColumnException(other.name)
   }
 
-  /** Encode a column of Catalyst values (inverse of decode). */
-  def encode(out: Output, t: ChType, values: Array[Any]): Unit = t match {
+  /**
+   * Encode rows [0, rows) of `v` as `t` — the exact inverse of
+   * [[decode]], over the same vectors: bulk little-endian writes for
+   * fixed-width types through the output's scratch window, text
+   * straight from UTF-8 bytes, null masks for Nullable, offsets then
+   * child vectors for Array/Map (a child's values [0, total) in row
+   * order, the layout both decode and the row converter build), struct
+   * children for Tuple, and a per-block dictionary for LowCardinality.
+   * Values are read by the vector's own type, so a LowCardinality
+   * vector reads through its dictionary and a ByteType/ShortType
+   * vector feeds an Int8/Int16 column. A null slot writes ClickHouse's
+   * default for the type (zero, empty, the first enum label) — what a
+   * Nullable column stores under its mask and what a null Array, Map or
+   * Tuple cell degrades to (ClickHouse has no nullable containers).
+   */
+  def encode(out: Output, t: ChType, v: WritableColumnVector, rows: Int): Unit = t match {
     case ChString =>
       var i = 0
-      while (i < values.length) {
-        values(i) match {
-          case u: UTF8String => // UTF-8 bytes pass through, no String round trip
-            val b = u.getBytes
-            out.writeVarUInt(b.length.toLong)
-            out.writeBytes(b)
-          case other => out.writeString(String.valueOf(other))
-        }
-        i += 1
-      }
+      while (i < rows) { out.writeText(v.getUTF8String(i)); i += 1 }
     case ChFixedString(n) =>
       // CH INSERT semantics: shorter values NUL-pad to n bytes, longer
       // ones are an error (decode's sanitize strips the padding back).
@@ -485,11 +521,8 @@ object ColumnCodec {
       // silently fail to round-trip. FixedString support is therefore
       // text-only; binary payloads belong in String columns.
       var i = 0
-      while (i < values.length) {
-        val b = values(i) match {
-          case u: UTF8String => u.getBytes
-          case other => String.valueOf(other).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        }
+      while (i < rows) {
+        val b = if (v.isNullAt(i)) Array.emptyByteArray else v.getBinary(i)
         if (b.length > n) throw new IllegalArgumentException(
           s"clickhouse_native FixedString($n): value of ${b.length} bytes is too long")
         if (b.contains(0.toByte)) throw new IllegalArgumentException(
@@ -501,282 +534,225 @@ object ColumnCodec {
         while (p < n) { out.writeByte(0); p += 1 }
         i += 1
       }
-    case ChUInt8 | ChInt8 =>
-      var i = 0
-      while (i < values.length) { out.writeByte(values(i).asInstanceOf[Number].intValue() & 0xff); i += 1 }
+    case ChUInt8 | ChInt8 => fill(out, rows, 1)((b, j, i) => b.put(j, intAt(v, i).toByte))
     case ChBool =>
-      var i = 0
-      while (i < values.length) { out.writeByte(if (values(i).asInstanceOf[Boolean]) 1 else 0); i += 1 }
-    case ChUInt16 | ChInt16 | ChDate =>
-      var i = 0
-      while (i < values.length) { out.writeShortLE(values(i).asInstanceOf[Number].shortValue()); i += 1 }
-    case ChUInt32 | ChInt32 | ChDate32 =>
-      var i = 0
-      while (i < values.length) { out.writeIntLE(values(i).asInstanceOf[Number].intValue()); i += 1 }
+      fill(out, rows, 1)((b, j, i) => b.put(j, (if (!v.isNullAt(i) && v.getBoolean(i)) 1 else 0).toByte))
+    case ChUInt16 | ChInt16 | ChDate => fill(out, rows, 2)((b, j, i) => b.putShort(2 * j, intAt(v, i).toShort))
+    case ChUInt32 => fill(out, rows, 4)((b, j, i) => b.putInt(4 * j, longAt(v, i).toInt))
+    case ChInt32 | ChDate32 => fill(out, rows, 4)((b, j, i) => b.putInt(4 * j, intAt(v, i)))
+    case ChUInt64 | ChInt64 => fill(out, rows, 8)((b, j, i) => b.putLong(8 * j, longAt(v, i)))
+    case ChFloat32 => fill(out, rows, 4) { (b, j, i) =>
+      b.putInt(4 * j, java.lang.Float.floatToIntBits(if (v.isNullAt(i)) 0f else v.getFloat(i)))
+    }
+    case ChFloat64 => fill(out, rows, 8) { (b, j, i) =>
+      b.putLong(8 * j, java.lang.Double.doubleToLongBits(if (v.isNullAt(i)) 0d else v.getDouble(i)))
+    }
     case d: ChDecimal =>
-      var i = 0
-      if (d.byteWidth <= 8) {
-        while (i < values.length) {
-          val unscaled = values(i).asInstanceOf[org.apache.spark.sql.types.Decimal].toUnscaledLong
-          if (d.byteWidth == 4) out.writeIntLE(unscaled.toInt) else out.writeLongLE(unscaled)
-          i += 1
-        }
-      } else {
-        // Decimal128 tier: unscaled BigInteger → 16 LE bytes,
-        // sign-extended two's complement (inverse of decode)
-        while (i < values.length) {
-          val unscaled = values(i).asInstanceOf[org.apache.spark.sql.types.Decimal]
-            .toJavaBigDecimal.setScale(d.scale).unscaledValue()
-          val be = unscaled.toByteArray // big-endian, minimal length
-          val fill = if (unscaled.signum() < 0) 0xff else 0x00
-          var j = 0
-          while (j < 16) {
-            val k = be.length - 1 - j // byte index counted from the LSB
-            out.writeByte(if (k >= 0) be(k) & 0xff else fill)
-            j += 1
-          }
-          i += 1
+      // the unscaled integer of each Spark storage tier: Int, Long, or
+      // big-endian two's-complement bytes sign-extended to 16 LE bytes
+      d.byteWidth match {
+        case 4 => fill(out, rows, 4)((b, j, i) => b.putInt(4 * j, intAt(v, i)))
+        case 8 => fill(out, rows, 8)((b, j, i) => b.putLong(8 * j, longAt(v, i)))
+        case w => fill(out, rows, w) { (b, j, i) =>
+          val be = if (v.isNullAt(i)) Array[Byte](0) else v.getBinary(i)
+          val sign: Byte = if (be(0) < 0) -1 else 0
+          var k = 0
+          while (k < w) { b.put(w * j + k, if (k < be.length) be(be.length - 1 - k) else sign); k += 1 }
         }
       }
-    case ChUInt64 | ChInt64 =>
-      var i = 0
-      while (i < values.length) { out.writeLongLE(values(i).asInstanceOf[Number].longValue()); i += 1 }
-    case e @ ChEnum8(_) =>
-      // label → declared Int8 code; an undeclared label fails loudly
-      // (ClickHouse likewise rejects unknown enum values at INSERT)
-      var i = 0
-      while (i < values.length) {
-        val label = String.valueOf(values(i))
-        out.writeByte(e.byLabel.getOrElse(label, throw new IllegalArgumentException(
-          s"clickhouse_native ${e.name}: '$label' is not a declared enum value")).toInt & 0xff)
-        i += 1
-      }
-    case e @ ChEnum16(_) =>
-      var i = 0
-      while (i < values.length) {
-        val label = String.valueOf(values(i))
-        out.writeShortLE(e.byLabel.getOrElse(label, throw new IllegalArgumentException(
-          s"clickhouse_native ${e.name}: '$label' is not a declared enum value")))
-        i += 1
-      }
-    case ChFloat32 =>
-      var i = 0
-      while (i < values.length) { out.writeFloatLE(values(i).asInstanceOf[Float]); i += 1 }
-    case ChFloat64 =>
-      var i = 0
-      while (i < values.length) { out.writeDoubleLE(values(i).asInstanceOf[Double]); i += 1 }
-    case ChDateTime(_) =>
-      var i = 0
-      while (i < values.length) { out.writeIntLE((values(i).asInstanceOf[Long] / 1000000L).toInt); i += 1 }
+    case ChDateTime(_) => fill(out, rows, 4)((b, j, i) => b.putInt(4 * j, (longAt(v, i) / 1000000L).toInt))
     case ChDateTime64(p, _) =>
       // Catalyst micros → 10^-p ticks; p > 6 needs a multiply (the
       // inverse of decode's divide), not 10^(6-p).toLong which is 0.
-      var i = 0
       if (p <= 6) {
         val div = math.pow(10, 6 - p).toLong
-        while (i < values.length) { out.writeLongLE(values(i).asInstanceOf[Long] / div); i += 1 }
+        fill(out, rows, 8)((b, j, i) => b.putLong(8 * j, longAt(v, i) / div))
       } else {
         val mul = math.pow(10, p - 6).toLong
-        while (i < values.length) { out.writeLongLE(values(i).asInstanceOf[Long] * mul); i += 1 }
+        fill(out, rows, 8)((b, j, i) => b.putLong(8 * j, longAt(v, i) * mul))
       }
+    // label → declared code; an undeclared label fails loudly (ClickHouse
+    // likewise rejects unknown enum values at INSERT). The first declared
+    // value is ClickHouse's implicit enum default.
+    case e @ ChEnum8(_) => fill(out, rows, 1) { (b, j, i) =>
+      b.put(j, if (v.isNullAt(i)) e.values.head._2 else enumCode(e.name, e.byLabel, v, i))
+    }
+    case e @ ChEnum16(_) => fill(out, rows, 2) { (b, j, i) =>
+      b.putShort(2 * j, if (v.isNullAt(i)) e.values.head._2 else enumCode(e.name, e.byLabel, v, i))
+    }
     case ChNullable(inner) =>
-      var i = 0
-      while (i < values.length) { out.writeByte(if (values(i) == null) 1 else 0); i += 1 }
-      val defaults = values.map(v => if (v == null) defaultValue(inner) else v)
-      encode(out, inner, defaults)
-    case at @ ChArray(inner) =>
-      // ClickHouse has no Nullable(Array/Map/Tuple), so forSpark maps a
-      // nullable Spark container column to a bare container type; a null
-      // cell reaching here degrades to the empty container (same
-      // null→default rule as the ChNullable inner-column encode above).
-      val vs = nullsToDefault(at, values)
-      var cum = 0L
-      var i = 0
-      while (i < vs.length) {
-        cum += vs(i).asInstanceOf[ArrayData].numElements()
-        out.writeLongLE(cum)
-        i += 1
-      }
-      val flat = vs.flatMap(v => v.asInstanceOf[ArrayData].toObjectArray(inner.sparkType))
-      encode(out, inner, flat.asInstanceOf[Array[Any]])
-    case lc: ChLowCardinality =>
-      encodeLowCardinality(out, lc, values)
-    case mt @ ChMap(kt, vt) =>
-      val vs = nullsToDefault(mt, values)
-      var cum = 0L
-      var i = 0
-      while (i < vs.length) {
-        cum += vs(i).asInstanceOf[org.apache.spark.sql.catalyst.util.MapData].numElements()
-        out.writeLongLE(cum)
-        i += 1
-      }
-      val flatK = vs.flatMap(v =>
-        v.asInstanceOf[org.apache.spark.sql.catalyst.util.MapData].keyArray().toObjectArray(kt.sparkType))
-      val flatV = vs.flatMap(v =>
-        v.asInstanceOf[org.apache.spark.sql.catalyst.util.MapData].valueArray().toObjectArray(vt.sparkType))
-      encode(out, kt, flatK.asInstanceOf[Array[Any]])
-      encode(out, vt, flatV.asInstanceOf[Array[Any]])
-    case tt @ ChTuple(fields) =>
-      val values2 = nullsToDefault(tt, values)
+      fill(out, rows, 1)((b, j, i) => b.put(j, (if (v.isNullAt(i)) 1 else 0).toByte))
+      encode(out, inner, v, rows)
+    case ChArray(inner) =>
+      encode(out, inner, v.arrayData(), writeOffsets(out, v, rows))
+    case ChMap(kt, vt) =>
+      val total = writeOffsets(out, v, rows)
+      encode(out, kt, v.getChild(0), total)
+      encode(out, vt, v.getChild(1), total)
+    case ChTuple(fields) =>
       var f = 0
-      while (f < fields.length) {
-        val ft = fields(f)._2
-        val col = new Array[Any](values2.length)
-        var i = 0
-        while (i < values2.length) {
-          val r = values2(i).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
-          col(i) = if (r.isNullAt(f)) null else r.get(f, ft.sparkType)
-          i += 1
-        }
-        encode(out, ft, col)
-        f += 1
-      }
-    case ChUuid =>
-      var i = 0
-      while (i < values.length) {
-        val s = String.valueOf(values(i))
+      while (f < fields.length) { encode(out, fields(f)._2, v.getChild(f), rows); f += 1 }
+    case ChUuid => fill(out, rows, 16) { (b, j, i) =>
+      if (v.isNullAt(i)) { b.putLong(16 * j, 0L); b.putLong(16 * j + 8, 0L) }
+      else {
+        val s = v.getUTF8String(i).toString
         val u = try java.util.UUID.fromString(s)
           catch { case _: IllegalArgumentException =>
             throw new IllegalArgumentException(
               s"clickhouse_native UUID column: '$s' is not a UUID") }
-        out.writeLongLE(u.getMostSignificantBits)
-        out.writeLongLE(u.getLeastSignificantBits)
-        i += 1
+        b.putLong(16 * j, u.getMostSignificantBits)
+        b.putLong(16 * j + 8, u.getLeastSignificantBits)
       }
-    case ChIPv4 =>
-      var i = 0
-      while (i < values.length) {
-        val s = String.valueOf(values(i))
-        val parts = s.split('.')
-        def oct(p: String): Int = {
-          val v = p.toIntOption.getOrElse(-1)
-          if (v < 0 || v > 255) throw new IllegalArgumentException(
-            s"clickhouse_native IPv4 column: '$s' is not a dotted-quad address")
-          v
-        }
-        if (parts.length != 4) throw new IllegalArgumentException(
-          s"clickhouse_native IPv4 column: '$s' is not a dotted-quad address")
-        out.writeIntLE((oct(parts(0)) << 24) | (oct(parts(1)) << 16) |
-          (oct(parts(2)) << 8) | oct(parts(3)))
-        i += 1
-      }
-    case ChIPv6 =>
-      var i = 0
-      while (i < values.length) {
-        val s = String.valueOf(values(i))
-        // literal guard: ':' never appears in hostnames, so getByName
-        // on a colon-containing string can never trigger a DNS lookup;
-        // anything without a colon is rejected before the call
-        if (s.indexOf(':') < 0 || !s.forall(c =>
-            (c >= '0' && c <= '9') || (c >= 'a' && c <= 'f') ||
-            (c >= 'A' && c <= 'F') || c == ':' || c == '.'))
-          throw new IllegalArgumentException(
-            s"clickhouse_native IPv6 column: '$s' is not an IPv6 literal")
-        val addr = try java.net.InetAddress.getByName(s)
-          catch { case _: java.net.UnknownHostException =>
-            throw new IllegalArgumentException(
-              s"clickhouse_native IPv6 column: '$s' is not an IPv6 literal") }
-        val bytes = addr.getAddress match {
-          case b16 if b16.length == 16 => b16
-          case b4 => // v4-mapped literal parsed as Inet4Address → re-embed
-            val b = new Array[Byte](16)
-            b(10) = -1; b(11) = -1
-            System.arraycopy(b4, 0, b, 12, 4)
-            b
-        }
-        out.writeBytes(bytes)
-        i += 1
-      }
+    }
+    case ChIPv4 => fill(out, rows, 4) { (b, j, i) =>
+      b.putInt(4 * j, if (v.isNullAt(i)) 0 else ipv4(v.getUTF8String(i).toString))
+    }
+    case ChIPv6 => fill(out, rows, 16) { (b, j, i) =>
+      b.put(16 * j, if (v.isNullAt(i)) new Array[Byte](16) else ipv6(v.getUTF8String(i).toString))
+    }
+    case lc: ChLowCardinality =>
+      encodeLowCardinality(out, lc, v, rows)
     case other =>
       throw new UnsupportedColumnException(other.name)
   }
 
   /**
+   * Write `rows` values of `width` bytes in chunks through the output's
+   * little-endian scratch window (the inverse of [[chunks]]);
+   * `put(window, j, i)` stores row `i` at window slot `j`.
+   */
+  private def fill(out: Output, rows: Int, width: Int)(put: Put): Unit = {
+    val b = out.scratch
+    val perChunk = b.capacity / width
+    var first = 0
+    while (first < rows) {
+      val n = math.min(perChunk, rows - first)
+      var j = 0
+      while (j < n) { put(b, j, first + j); j += 1 }
+      out.writeBytes(b.array, 0, n * width)
+      first += n
+    }
+  }
+
+  /** One value store of [[fill]] (a trait, not a Function3, so rows stay unboxed). */
+  private trait Put { def apply(b: ByteBuffer, j: Int, i: Int): Unit }
+
+  /** Row `i` of an integer vector, 0 when null. */
+  private def intAt(v: WritableColumnVector, i: Int): Int =
+    if (v.isNullAt(i)) 0
+    else v.dataType match {
+      case ByteType => v.getByte(i)
+      case ShortType => v.getShort(i)
+      case _ => v.getInt(i)
+    }
+
+  private def longAt(v: WritableColumnVector, i: Int): Long = if (v.isNullAt(i)) 0L else v.getLong(i)
+
+  private def enumCode[C](name: String, byLabel: Map[String, C], v: WritableColumnVector, i: Int): C = {
+    val label = v.getUTF8String(i).toString
+    byLabel.getOrElse(label, throw new IllegalArgumentException(
+      s"clickhouse_native $name: '$label' is not a declared enum value"))
+  }
+
+  private def ipv4(s: String): Int = {
+    val parts = s.split('.')
+    def oct(p: String): Int = {
+      val v = p.toIntOption.getOrElse(-1)
+      if (v < 0 || v > 255) throw new IllegalArgumentException(
+        s"clickhouse_native IPv4 column: '$s' is not a dotted-quad address")
+      v
+    }
+    if (parts.length != 4) throw new IllegalArgumentException(
+      s"clickhouse_native IPv4 column: '$s' is not a dotted-quad address")
+    (oct(parts(0)) << 24) | (oct(parts(1)) << 16) | (oct(parts(2)) << 8) | oct(parts(3))
+  }
+
+  private def ipv6(s: String): Array[Byte] = {
+    // literal guard: ':' never appears in hostnames, so getByName
+    // on a colon-containing string can never trigger a DNS lookup;
+    // anything without a colon is rejected before the call
+    if (s.indexOf(':') < 0 || !s.forall(c =>
+        (c >= '0' && c <= '9') || (c >= 'a' && c <= 'f') ||
+        (c >= 'A' && c <= 'F') || c == ':' || c == '.'))
+      throw new IllegalArgumentException(
+        s"clickhouse_native IPv6 column: '$s' is not an IPv6 literal")
+    val addr = try java.net.InetAddress.getByName(s)
+      catch { case _: java.net.UnknownHostException =>
+        throw new IllegalArgumentException(
+          s"clickhouse_native IPv6 column: '$s' is not an IPv6 literal") }
+    addr.getAddress match {
+      case b16 if b16.length == 16 => b16
+      case b4 => // v4-mapped literal parsed as Inet4Address → re-embed
+        val b = new Array[Byte](16)
+        b(10) = -1; b(11) = -1
+        System.arraycopy(b4, 0, b, 12, 4)
+        b
+    }
+  }
+
+  /** Cumulative UInt64 end offsets of `rows` Array/Map cells (a null cell
+    * is empty); returns the element count of the flattened child stream. */
+  private def writeOffsets(out: Output, v: WritableColumnVector, rows: Int): Int = {
+    var end = 0L
+    fill(out, rows, 8) { (b, j, i) =>
+      if (!v.isNullAt(i)) {
+        if (v.getArrayOffset(i) != end)
+          throw new IllegalArgumentException(s"array cell $i does not start at element $end")
+        end += v.getArrayLength(i)
+      }
+      b.putLong(8 * j, end)
+    }
+    end.toInt
+  }
+
+  /**
    * Inverse of [[decodeLowCardinality]]: per-block dictionary + indices
-   * (keys version 1, shared-with-additional-keys). For
+   * (keys version 1, shared-with-additional-keys). Dictionary entries
+   * are the distinct values in first-seen order. For
    * `LowCardinality(Nullable(T))`, dictionary slot 0 holds the inner
    * type's default and index 0 means null — the layout ClickHouse
    * itself writes and our reader expects. Index width is the smallest
    * class that addresses the dictionary.
    */
-  private def encodeLowCardinality(out: Output, lc: ChLowCardinality, values: Array[Any]): Unit = {
-    val (inner, nullable) = lc.inner match {
-      case ChNullable(i) => (i, true)
-      case i => (i, false)
-    }
-    val dict = new scala.collection.mutable.ArrayBuffer[Any]()
+  private def encodeLowCardinality(out: Output, lc: ChLowCardinality, v: WritableColumnVector,
+      rows: Int): Unit = {
+    val (inner, nullable) = lowCardinalityInner(lc)
+    val cells = new ColumnarArray(v, 0, rows)
     val slot = new java.util.HashMap[Any, Integer]()
-    if (nullable) dict += defaultValue(inner) // slot 0 = null stand-in
-    val indices = new Array[Int](values.length)
+    val firstRow = new Array[Int](rows + 1) // dictionary slot → the row it came from
+    var size = if (nullable) 1 else 0 // slot 0 = null stand-in
+    val indices = new Array[Int](rows)
     var i = 0
-    while (i < values.length) {
-      val v = values(i)
+    while (i < rows) {
       indices(i) =
-        if (nullable && v == null) 0
+        if (nullable && v.isNullAt(i)) 0
         else {
-          var s = slot.get(v)
-          if (s == null) { s = Integer.valueOf(dict.length); slot.put(v, s); dict += v }
+          val key = if (v.isNullAt(i)) null else cells.get(i, v.dataType)
+          var s = slot.get(key)
+          if (s == null) { s = Integer.valueOf(size); slot.put(key, s); firstRow(size) = i; size += 1 }
           s.intValue()
         }
       i += 1
     }
+    val dict = new OnHeapColumnVector(size, v.dataType)
+    if (nullable) dict.putNull(0) // encodes as the inner default
+    var s = if (nullable) 1 else 0
+    while (s < size) { copyValue(v, firstRow(s), dict, s); s += 1 }
     val widthClass =
-      if (dict.length <= 0xff) 0
-      else if (dict.length <= 0xffff) 1
+      if (size <= 0xff) 0
+      else if (size <= 0xffff) 1
       else 2 // a 64 KiB-row block cannot exceed UInt32 dictionary slots
     out.writeLongLE(1L) // keys serialization version
     out.writeLongLE(LcHasAdditionalKeys | widthClass.toLong)
-    out.writeLongLE(dict.length.toLong)
-    encode(out, inner, dict.toArray)
-    out.writeLongLE(values.length.toLong)
-    i = 0
-    while (i < values.length) {
-      widthClass match {
-        case 0 => out.writeByte(indices(i))
-        case 1 => out.writeShortLE(indices(i).toShort)
-        case _ => out.writeIntLE(indices(i))
-      }
-      i += 1
+    out.writeLongLE(size.toLong)
+    encode(out, inner, dict, size)
+    dict.close()
+    out.writeLongLE(rows.toLong)
+    widthClass match {
+      case 0 => fill(out, rows, 1)((b, j, i) => b.put(j, indices(i).toByte))
+      case 1 => fill(out, rows, 2)((b, j, i) => b.putShort(2 * j, indices(i).toShort))
+      case _ => fill(out, rows, 4)((b, j, i) => b.putInt(4 * j, indices(i)))
     }
-  }
-
-  /** Replace null container cells with the type's empty/default value
-    * (allocation-free when the column has no nulls — the common case). */
-  private def nullsToDefault(t: ChType, values: Array[Any]): Array[Any] = {
-    var i = 0
-    var hasNull = false
-    while (i < values.length && !hasNull) { hasNull = values(i) == null; i += 1 }
-    if (!hasNull) values
-    else values.map(v => if (v == null) defaultValue(t) else v)
-  }
-
-  private def defaultValue(t: ChType): Any = t match {
-    // a nullable slot's default IS null — its own encode writes the
-    // null mask and substitutes the inner default (only reachable from
-    // container defaults, e.g. a tuple with nullable fields)
-    case _: ChNullable => null
-    // an enum's default must be an ENCODABLE label (the null-slot
-    // stand-in under Nullable) — use the first declared value, which is
-    // also ClickHouse's implicit enum default
-    case e: ChEnum8 => UTF8String.fromString(e.values.head._1)
-    case e: ChEnum16 => UTF8String.fromString(e.values.head._1)
-    case ChString | _: ChFixedString => UTF8String.fromString("")
-    // CH defaults for the decoded-string network types (null slots
-    // under Nullable encode these placeholder bytes)
-    case ChUuid => UTF8String.fromString("00000000-0000-0000-0000-000000000000")
-    case ChIPv4 => UTF8String.fromString("0.0.0.0")
-    case ChIPv6 => UTF8String.fromString("0:0:0:0:0:0:0:0")
-    case ChBool => java.lang.Boolean.FALSE
-    case ChUInt8 | ChInt8 | ChUInt16 | ChInt16 | ChInt32 | ChDate | ChDate32 => Integer.valueOf(0)
-    case ChFloat32 => java.lang.Float.valueOf(0f)
-    case ChFloat64 => java.lang.Double.valueOf(0d)
-    case d: ChDecimal => org.apache.spark.sql.types.Decimal(0L, d.precision, d.scale)
-    case _: ChArray => new GenericArrayData(Array.empty[Any])
-    case _: ChMap => new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-      new GenericArrayData(Array.empty[Any]), new GenericArrayData(Array.empty[Any]))
-    case ChTuple(fields) => new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      fields.map(f => defaultValue(f._2)).toArray)
-    case _ => java.lang.Long.valueOf(0L)
   }
 }
 

@@ -116,7 +116,7 @@ object NativeBlockReader {
       throw new IOException(s"implausible row count $nRows in Native block")
     val rows = nRows.toInt
     val header = Seq.newBuilder[(String, ChType)]
-    val cols = Array.newBuilder[DecodedColumn]
+    val cols = Array.newBuilder[NativeColumn]
     var c = 0
     while (c < nCols) {
       val name = in.readString()
@@ -125,7 +125,7 @@ object NativeBlockReader {
       if (projection.forall(_.contains(name))) {
         val v = new OnHeapColumnVector(rows, t.sparkType)
         ColumnCodec.decode(in, t, rows, v)
-        cols += DecodedColumn(name, t, v)
+        cols += NativeColumn(name, t, v)
       } else if (lastValues || c < nCols - 1) {
         try ColumnCodec.skip(in, t, rows)
         catch {
@@ -159,7 +159,8 @@ object NativeBlockReader {
 }
 
 /**
- * Streaming block writer — the inverse, for fixtures and the sink path.
+ * Streaming block writer — the inverse, for fixtures and the sink path:
+ * each column's vector encodes through [[ColumnCodec.encode]].
  *
  * With `compression` = lz4|zstd the native byte stream is wrapped in
  * ClickHouse compressed frames ([[NativeCompression]]); [[position]]
@@ -194,7 +195,7 @@ final class NativeBlockWriter(stream: OutputStream, compression: String = "none"
     block.columns.foreach { col =>
       out.writeString(col.name)
       out.writeString(col.chType.name)
-      ColumnCodec.encode(out, col.chType, col.values)
+      ColumnCodec.encode(out, col.chType, col.vector, block.numRows)
     }
   }
 

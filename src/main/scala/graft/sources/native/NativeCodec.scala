@@ -1,7 +1,10 @@
 package graft.sources.native
 
 import java.io.{EOFException, InputStream, OutputStream}
+import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
+
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Low-level wire primitives of the ClickHouse Native format:
@@ -16,8 +19,7 @@ object NativeCodec {
     private[this] val buf = new Array[Byte](8)
 
     /** Reusable 64 KiB little-endian window for bulk column decodes. */
-    lazy val scratch: java.nio.ByteBuffer =
-      java.nio.ByteBuffer.allocate(64 * 1024).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    lazy val scratch: ByteBuffer = window()
 
     def readByte(): Int = {
       val b = in.read()
@@ -74,9 +76,20 @@ object NativeCodec {
       throw new java.io.IOException("VarUInt longer than 10 bytes")
     }
 
+    /**
+     * `len` bytes. A length is only a claim until the bytes arrive, so
+     * past [[Window]] the buffer grows (doubling, capped at `len`) only
+     * as they do: a lying length ends in EOF, not in an allocation of
+     * the claimed size.
+     */
     def readBytes(len: Int): Array[Byte] = {
-      val a = new Array[Byte](len)
-      readFully(a, 0, len)
+      var a = new Array[Byte](math.min(len, Window))
+      var pos = 0
+      while (pos < len) {
+        if (pos == a.length) a = java.util.Arrays.copyOf(a, math.min(len.toLong, 2L * pos).toInt)
+        readFully(a, pos, a.length - pos)
+        pos = a.length
+      }
       a
     }
 
@@ -101,10 +114,6 @@ object NativeCodec {
       sanitize(new String(readBytes(len.toInt), StandardCharsets.UTF_8))
     }
 
-    def readShortLE(): Short = {
-      readFully(buf, 0, 2)
-      ((buf(0) & 0xff) | ((buf(1) & 0xff) << 8)).toShort
-    }
     def readIntLE(): Int = {
       readFully(buf, 0, 4)
       (buf(0) & 0xff) | ((buf(1) & 0xff) << 8) | ((buf(2) & 0xff) << 16) | ((buf(3) & 0xff) << 24)
@@ -115,13 +124,14 @@ object NativeCodec {
         ((buf(3) & 0xffL) << 24) | ((buf(4) & 0xffL) << 32) | ((buf(5) & 0xffL) << 40) |
         ((buf(6) & 0xffL) << 48) | ((buf(7) & 0xffL) << 56)
     }
-    def readFloatLE(): Float = java.lang.Float.intBitsToFloat(readIntLE())
-    def readDoubleLE(): Double = java.lang.Double.longBitsToDouble(readLongLE())
   }
 
   /** Buffered little-endian writer. */
   final class Output(out: OutputStream) {
     private[this] val buf = new Array[Byte](8)
+
+    /** Reusable 64 KiB little-endian window for bulk column encodes. */
+    lazy val scratch: ByteBuffer = window()
 
     def writeByte(b: Int): Unit = out.write(b)
 
@@ -142,6 +152,13 @@ object NativeCodec {
     }
 
     def writeBytes(b: Array[Byte]): Unit = out.write(b)
+    def writeBytes(b: Array[Byte], off: Int, len: Int): Unit = out.write(b, off, len)
+
+    /** A length-prefixed String value straight from its UTF-8 bytes
+      * (null writes the empty string, ClickHouse's default). */
+    def writeText(u: UTF8String): Unit =
+      if (u == null) writeVarUInt(0L)
+      else { writeVarUInt(u.numBytes.toLong); u.writeTo(out) }
 
     def writeShortLE(v: Short): Unit = {
       buf(0) = (v & 0xff).toByte; buf(1) = ((v >> 8) & 0xff).toByte
@@ -157,10 +174,14 @@ object NativeCodec {
       while (i < 8) { buf(i) = (v >> (8 * i)).toByte; i += 1 }
       out.write(buf, 0, 8)
     }
-    def writeFloatLE(v: Float): Unit = writeIntLE(java.lang.Float.floatToIntBits(v))
-    def writeDoubleLE(v: Double): Unit = writeLongLE(java.lang.Double.doubleToLongBits(v))
     def flush(): Unit = out.flush()
   }
+
+  /** Size of the bulk-transfer windows, and of the largest read
+    * allocated before its bytes arrive. */
+  val Window: Int = 64 * 1024
+
+  private def window(): ByteBuffer = ByteBuffer.allocate(Window).order(ByteOrder.LITTLE_ENDIAN)
 
   /** Strip NUL and U+FFFD — reference src/lib.rs:73-74. */
   def sanitize(s: String): String = {

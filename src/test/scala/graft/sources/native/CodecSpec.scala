@@ -198,9 +198,14 @@ class CodecSpec extends AnyFunSuite {
 
   private def encodeBytes(t: ChType, values: Array[Any]): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
-    ColumnCodec.encode(new NativeCodec.Output(bos), t, values)
+    val out = new NativeCodec.Output(bos)
+    ColumnCodec.encode(out, t, NativeColumn("c", t, values).vector, values.length)
+    out.flush()
     bos.toByteArray
   }
+
+  private def utf8(ss: String*): Array[Any] =
+    ss.map(org.apache.spark.unsafe.types.UTF8String.fromString).toArray
 
   test("Decimal128 wire layout: 16-byte LE two's complement (hand-built bytes)") {
     import ChType._
@@ -240,22 +245,22 @@ class CodecSpec extends AnyFunSuite {
     assert(decodeBytes(t, 3, bytes).map(String.valueOf(_)).toSeq ===
       Seq("hot", "cold", "Unknown(7)"))
     // encode: declared labels invert; an undeclared label fails loudly
-    assert(encodeBytes(t, Array[Any]("hot", "cold")).toSeq === bytes.take(4).toSeq)
-    intercept[IllegalArgumentException] { encodeBytes(t, Array[Any]("warm")) }
+    assert(encodeBytes(t, utf8("hot", "cold")).toSeq === bytes.take(4).toSeq)
+    intercept[IllegalArgumentException] { encodeBytes(t, utf8("warm")) }
   }
 
   test("FixedString encode: NUL-pad short, reject too-long (CH INSERT semantics)") {
     import ChType._
     val t = ChFixedString(4)
-    val bytes = encodeBytes(t, Array[Any]("ab", "wxyz"))
+    val bytes = encodeBytes(t, utf8("ab", "wxyz"))
     assert(bytes.toSeq === "ab".getBytes.toSeq ++ Seq[Byte](0, 0) ++ "wxyz".getBytes.toSeq)
     // decode strips the padding back (sanitize)
     assert(decodeBytes(t, 2, bytes).map(String.valueOf(_)).toSeq === Seq("ab", "wxyz"))
-    intercept[IllegalArgumentException] { encodeBytes(t, Array[Any]("toolong")) }
+    intercept[IllegalArgumentException] { encodeBytes(t, utf8("toolong")) }
     // interior NULs don't round-trip (decode sanitizes ALL NULs,
     // reference parity) — reject at encode rather than corrupt silently
     intercept[IllegalArgumentException] {
-      encodeBytes(t, Array[Any]("a\u0000b"))
+      encodeBytes(t, utf8("a\u0000b"))
     }
   }
 
@@ -264,7 +269,7 @@ class CodecSpec extends AnyFunSuite {
     val t = ChEnum8(Seq("a" -> 1.toByte, "b" -> (-3).toByte))
     val bytes = Array[Byte](1, -3)
     assert(decodeBytes(t, 2, bytes).map(String.valueOf(_)).toSeq === Seq("a", "b"))
-    assert(encodeBytes(t, Array[Any]("a", "b")).toSeq === bytes.toSeq)
-    intercept[IllegalArgumentException] { encodeBytes(t, Array[Any]("z")) }
+    assert(encodeBytes(t, utf8("a", "b")).toSeq === bytes.toSeq)
+    intercept[IllegalArgumentException] { encodeBytes(t, utf8("z")) }
   }
 }

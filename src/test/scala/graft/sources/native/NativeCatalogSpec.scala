@@ -29,6 +29,17 @@ class NativeCatalogSpec extends AnyFunSuite {
     case other => other.children.flatMap(shuffles)
   }
 
+  /** Node names of an executed write command's physical plan. */
+  private def writePlanNodes(df: DataFrame): Seq[String] = {
+    def nodes(p: SparkPlan): Seq[String] = p match {
+      case c: org.apache.spark.sql.execution.CommandResultExec => nodes(c.commandPhysicalPlan)
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case o => o.nodeName +: o.children.flatMap(nodes)
+    }
+    nodes(df.queryExecution.executedPlan)
+  }
+
   private def executedShuffles(df: DataFrame): Seq[SparkPlan] = {
     df.collect()
     shuffles(df.queryExecution.executedPlan)
@@ -63,7 +74,11 @@ class NativeCatalogSpec extends AnyFunSuite {
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.t1ns")
     spark.sql("DROP TABLE IF EXISTS graft.t1ns.people")
     spark.sql("CREATE TABLE graft.t1ns.people (id BIGINT, name STRING) USING clickhouse_native")
-    spark.sql("INSERT INTO graft.t1ns.people VALUES (1, 'ada'), (2, 'grace'), (3, 'edsger')")
+    val insert = spark.sql("INSERT INTO graft.t1ns.people VALUES (1, 'ada'), (2, 'grace'), (3, 'edsger')")
+    // no bucket, no sortBy: the write plans as it comes, no Sort or Exchange added
+    val planned = writePlanNodes(insert)
+    assert(planned.contains("AppendData"), planned)
+    assert(!planned.exists(n => n.contains("Sort") || n.contains("Exchange")), planned)
     val rows = spark.table("graft.t1ns.people").orderBy("id").collect()
     assert(rows.map(r => (r.getLong(0), r.getString(1))).toSeq ===
       Seq((1L, "ada"), (2L, "grace"), (3L, "edsger")))
@@ -278,6 +293,9 @@ class NativeCatalogSpec extends AnyFunSuite {
     val b = scans(scan.queryExecution.executedPlan).head
     assert(b.metrics("numOutputRows").value <= 65536L,
       s"sorted table point query should decode one block, read ${b.metrics("numOutputRows").value}")
+    // the sortBy ordering is what adds a Sort to a write plan
+    val planned = writePlanNodes(spark.sql("INSERT INTO graft.sorted.ev VALUES (2, 'x'), (1, 'y')"))
+    assert(planned.exists(_.startsWith("Sort")), planned)
   }
 
   test("unbucketed catalog tables still join correctly (no layout claims)") {

@@ -159,7 +159,7 @@ class NativeSourceSpec extends AnyFunSuite {
     val micros = Array[Any](java.lang.Long.valueOf(1700000000123456L), java.lang.Long.valueOf(0L))
     val bos = new ByteArrayOutputStream()
     val out = new NativeCodec.Output(bos)
-    ColumnCodec.encode(out, t, micros)
+    ColumnCodec.encode(out, t, NativeColumn("t", t, micros).vector, micros.length)
     out.flush()
     val in = new NativeCodec.Input(new ByteArrayInputStream(bos.toByteArray))
     val decoded = DecodedValues.decode(in, t, 2)
@@ -225,6 +225,72 @@ class NativeSourceSpec extends AnyFunSuite {
       val e = intercept[Exception](read.format("clickhouse_native").load(f).collect())
       assert(ioNaming(e, f).exists(_.getMessage.contains("implausible row count 2147483647")),
         e.toString)
+    }
+  }
+
+  /** A one-block, one-row Native file: a column `c` of wire type `t`
+    * whose values `body` writes, then an Int64 column `id` = 7. */
+  private def prunedColumnFile(tag: String, t: String)(body: NativeCodec.Output => Unit): String = {
+    val f = Files.createTempDirectory(s"graft-native-$tag").resolve("pruned.clickhouse")
+    val bos = new ByteArrayOutputStream()
+    val out = new NativeCodec.Output(bos)
+    out.writeVarUInt(2); out.writeVarUInt(1)
+    out.writeString("c"); out.writeString(t)
+    body(out)
+    out.writeString("id"); out.writeString("Int64"); out.writeLongLE(7L)
+    out.flush()
+    Files.write(f, bos.toByteArray)
+    f.toString
+  }
+
+  test("skipping a pruned column checks its counts before narrowing them") {
+    val lowCard = "LowCardinality(String)"
+    // each count is 2^32 + k: narrowed by .toInt it reads as k, which
+    // is exactly what the bytes that follow hold
+    val files = Seq(
+      // Array(Int64) whose final offset is 2^32+5, then 5 elements
+      "offset 4294967301 out of range" -> prunedColumnFile("skip-arr", "Array(Int64)") { out =>
+        out.writeLongLE((1L << 32) + 5); (0 until 5).foreach(i => out.writeLongLE(i.toLong))
+      },
+      // LowCardinality dictionary size 2^32+1, then one entry
+      "length 4294967297 out of range" -> prunedColumnFile("skip-lcdict", lowCard) { out =>
+        out.writeLongLE(1L); out.writeLongLE(0x200L); out.writeLongLE((1L << 32) + 1)
+        out.writeString("a"); out.writeLongLE(1L); out.writeByte(0)
+      },
+      // LowCardinality row count 2^32+1 in a one-row block
+      "row count 4294967297 != block rows 1" -> prunedColumnFile("skip-lcrows", lowCard) { out =>
+        out.writeLongLE(1L); out.writeLongLE(0x200L); out.writeLongLE(1L)
+        out.writeString("a"); out.writeLongLE((1L << 32) + 1); out.writeByte(0)
+      })
+    for ((msg, f) <- files; read <- Seq(spark.read, spark.read.schema("id BIGINT"))) {
+      val e = intercept[Exception](read.format("clickhouse_native").load(f).select("id").collect())
+      assert(ioNaming(e, f).exists(_.getMessage.contains(msg)), e.toString)
+    }
+  }
+
+  test("a lying String length fails naming the file, allocating only what arrives") {
+    // a one-row String column whose value, or whose name, claims `len`
+    // bytes and carries three
+    def lyingFile(tag: String)(body: NativeCodec.Output => Unit): String = {
+      val f = Files.createTempDirectory(s"graft-native-$tag").resolve("len.clickhouse")
+      val bos = new ByteArrayOutputStream()
+      val out = new NativeCodec.Output(bos)
+      out.writeVarUInt(1); out.writeVarUInt(1)
+      body(out)
+      out.writeBytes("abc".getBytes("UTF-8"))
+      out.flush()
+      Files.write(f, bos.toByteArray)
+      f.toString
+    }
+    for (len <- Seq(Int.MaxValue.toLong, 1L << 30)) {
+      val value = lyingFile("strval") { out =>
+        out.writeString("s"); out.writeString("String"); out.writeVarUInt(len)
+      }
+      val name = lyingFile("strname")(_.writeVarUInt(len))
+      for (f <- Seq(value, name)) {
+        val e = intercept[Exception](spark.read.format("clickhouse_native").load(f).collect())
+        assert(ioNaming(e, f).exists(_.getMessage.contains("unexpected EOF")), s"$len: $e")
+      }
     }
   }
 
@@ -360,6 +426,76 @@ class NativeSourceSpec extends AnyFunSuite {
     assert(parts.length === 3) // 25 rows / 10 per file
     val back = spark.read.format("clickhouse_native").load(dir)
     assert(back.collect().toSet === src.collect().toSet)
+  }
+
+  test("golden writer bytes: every writable type, plain and lz4, hash as recorded") {
+    // 300 rows in one task, two parts (200 + 100): every Spark type the
+    // writer maps, nulls in Nullable scalars, null Array/Map/Struct
+    // cells, nullable struct fields and map values, a LowCardinality
+    // string pair, and every columnTypes wire type.
+    val df = spark.range(0, 300, 1, 1).selectExpr(
+      "cast(id % 100 - 50 as tinyint) as b",
+      "cast(id * 7 - 1000 as smallint) as sh",
+      "cast(id * 31 - 4000 as int) as i",
+      "(id - 150) * 2654435761 as l",
+      "cast(id / 3 as float) as f",
+      "(id - 150) / 7.0d as d",
+      "id % 3 = 0 as bo",
+      "date_add(date'1965-01-01', cast(id * 40 as int)) as dt",
+      "timestamp_seconds(1600000000 + id * 37) as ts",
+      "cast(timestamp_seconds(1600000000 + id * 37) as timestamp_ntz) as ntz",
+      "cast((id - 150) / 7 as decimal(9, 2)) as dec9",
+      "cast((id - 150) * 1000003 / 13 as decimal(18, 4)) as dec18",
+      "cast((id - 150) * 123456789012345 as decimal(30, 6)) as dec30",
+      "concat('name-', cast(id as string)) as name",
+      "case when id % 5 = 0 then null else concat('v', cast(id as string)) end as s_null",
+      "coalesce(concat('tag', cast(id % 4 as string)), '') as tag",
+      "case when id % 10 = 0 then null else concat('c', cast(id % 3 as string)) end as tag_null",
+      "case when id % 6 = 0 then null else id end as l_null",
+      "case when id % 7 = 0 then null else array(id, id + 1) end as arr",
+      "array(case when id % 3 = 0 then null else cast(id as int) end) as arr_nulls",
+      "case when id % 8 = 0 then null else map('k', id, 'n', case when id % 2 = 0 then null " +
+        "else id end) end as m",
+      "case when id % 9 = 0 then null else named_struct('x', id, 'y', case when id % 2 = 0 " +
+        "then null else concat('y', cast(id as string)) end) end as st",
+      "case when id % 11 = 0 then null else concat('123e4567-e89b-12d3-a456-', " +
+        "lpad(cast(id as string), 12, '0')) end as u",
+      "concat('10.0.', cast(id % 256 as string), '.', cast(id % 7 as string)) as ip4",
+      "case when id % 13 = 0 then null else concat('2001:db8::', lower(hex(id))) end as ip6",
+      "case when id % 5 = 0 then null when id % 2 = 0 then 'a' else 'b' end as e8",
+      "case when id % 3 = 0 then 'cold' else 'hot' end as e16",
+      "substr(concat('f', cast(id as string)), 1, 6) as fs",
+      "cast(id % 256 as int) as u8",
+      "cast(id * 200 % 65536 as int) as u16",
+      "id * 14000000 % 4294967296 as u32",
+      "date_add(date'1990-01-01', cast(id as int)) as d16",
+      "timestamp_seconds(1600000000 + id) as ts32",
+      "cast(timestamp_seconds(1600000000 + id) as timestamp_ntz) as ntz9")
+    val columnTypes = "u:UUID, ip4:IPv4, ip6:IPv6, e8:Enum8('a' = 1, 'b' = 2), " +
+      "e16:Enum16('hot' = 300, 'cold' = -2), fs:FixedString(6), u8:UInt8, u16:UInt16, " +
+      "u32:UInt32, d16:Date, ts32:DateTime('UTC'), ntz9:DateTime64(9)"
+    // FNV-1a-64 of each part's bytes: a change here changes stored
+    // bytes and insert-dedup identity for every existing table
+    val recorded = Map(
+      "none" -> Seq("4715f13c204400fc", "ff38567b8916e587"),
+      "lz4" -> Seq("1e0ff7af7c1091c2", "fad9e0a30d407d82"))
+    val got = for ((compression, _) <- recorded) yield {
+      val dir = tmpDir(s"golden-$compression")
+      df.write.format("clickhouse_native").option("compression", compression)
+        .option("maxRowsPerFile", "200").option("columnTypes", columnTypes)
+        .mode("overwrite").save(dir)
+      val path = new org.apache.hadoop.fs.Path(dir)
+      val fs = path.getFileSystem(new org.apache.hadoop.conf.Configuration())
+      val parts = fs.listStatus(path).map(_.getPath)
+        .filter(_.getName.endsWith(".clickhouse")).sortBy(_.getName)
+      val header = NativeBlockReader.readHeader(
+        NativeCompression.maybeWrapRead(fs.open(parts.head), null)).toMap
+      assert(header("tag").name === "LowCardinality(String)")
+      assert(header("tag_null").name === "LowCardinality(Nullable(String))")
+      assert(spark.read.format("clickhouse_native").load(dir).count() === 300)
+      compression -> parts.map(p => NativeIndex.readMeta(fs, p)("contentHash")).toSeq
+    }
+    assert(got === recorded)
   }
 
   test("SQL surface: CREATE TABLE USING clickhouse_native, INSERT INTO, SELECT") {

@@ -56,7 +56,7 @@ class NetworkTypesSpec extends AnyFunSuite {
       null)
     val bos = new java.io.ByteArrayOutputStream()
     ColumnCodec.encode(new NativeCodec.Output(new java.io.DataOutputStream(bos)),
-      ChNullable(ChUuid), uuids)
+      ChNullable(ChUuid), NativeColumn("u", ChNullable(ChUuid), uuids).vector, uuids.length)
     val back = DecodedValues.decode(ChNullable(ChUuid), 3, bos.toByteArray)
     assert(String.valueOf(back(0)) === "123e4567-e89b-12d3-a456-426614174000")
     assert(String.valueOf(back(1)) === "ffffffff-ffff-ffff-ffff-ffffffffffff")
@@ -67,7 +67,8 @@ class NetworkTypesSpec extends AnyFunSuite {
     def enc(s: String): Array[Byte] = {
       val bos = new java.io.ByteArrayOutputStream()
       ColumnCodec.encode(new NativeCodec.Output(new java.io.DataOutputStream(bos)),
-        ChIPv6, Array[Any](org.apache.spark.unsafe.types.UTF8String.fromString(s)))
+        ChIPv6, NativeColumn("ip", ChIPv6,
+          Array[Any](org.apache.spark.unsafe.types.UTF8String.fromString(s))).vector, 1)
       bos.toByteArray
     }
     // compressed form round-trips through the expanded renderer

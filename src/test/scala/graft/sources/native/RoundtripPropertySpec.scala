@@ -13,7 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
  * random schemas over the supported type family × random row counts ×
  * random multi-block splits — the reference's multi-block multi-column
  * interleaving bug class (SURVEY §1.1) stays pinned under fuzz, not
- * just the one hand-built fixture.
+ * just the one hand-built fixture. Each case also re-encodes the
+ * decoded blocks and checks the bytes match what was written.
  */
 class RoundtripPropertySpec extends AnyFunSuite {
 
@@ -135,14 +136,22 @@ class RoundtripPropertySpec extends AnyFunSuite {
       val got: Array[scala.collection.mutable.ArrayBuffer[Any]] =
         Array.fill(nCols)(scala.collection.mutable.ArrayBuffer.empty[Any])
       var totalRows = 0
+      // decode → encode identity: the decoded blocks, re-encoded from
+      // their vectors, reproduce the written bytes exactly
+      val again = new ByteArrayOutputStream()
+      val rw = new NativeBlockWriter(again, codec)
       while (reader.hasNext) {
         val blk = reader.next()
         totalRows += blk.numRows
         blk.columns.zipWithIndex.foreach { case (c, ci) =>
           got(ci) ++= DecodedValues(c.vector, blk.numRows)
         }
+        rw.writeBlock(NativeBlock(blk.columns, blk.numRows))
       }
+      rw.close()
       assert(totalRows === nRows, s"case $case_i rows (types=${types.map(_.name).mkString(",")})")
+      assert(java.util.Arrays.equals(again.toByteArray, bos.toByteArray),
+        s"case $case_i re-encoded bytes (types=${types.map(_.name).mkString(",")})")
       types.indices.foreach { ci =>
         val exp = data(ci).map(render).toSeq
         val act = got(ci).map(render).toSeq
